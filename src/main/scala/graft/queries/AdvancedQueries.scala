@@ -13,6 +13,8 @@ import graft.ops.Skew
 import graft.sim.{Ivf, Similarity}
 import graft.text.TextOps
 
+import OracleSql._
+
 /** Driver-visible queries for the operators that live beyond plain SQL:
   * IVF / LSH approximate nearest neighbor, multimodal binary columns,
   * and skew-salted joins. Where the operator has an exact relational
@@ -27,12 +29,6 @@ object AdvancedQueries {
     Tables.load(s, dir, n)
 
   private def dec4(c: org.apache.spark.sql.Column) = c.cast(DecimalType(18, 4))
-
-  /** Embeddings table width — fixed by the testdata generator; the LSH
-    * oracle embeds per-dimension weight literals so it needs the dim
-    * statically.
-    */
-  private val EmbeddingDim = 64
 
   /** DuckDB-side packed hyperplane bucket: the SAME ±1 md5-parity
     * weights the engine derives ([[graft.functions.HyperplanePack
@@ -51,21 +47,15 @@ object AdvancedQueries {
     }.mkString("(", " + ", ")")
   }
 
-  /** Exact cosine in DuckDB — same IEEE op sequence as
-    * [[graft.sim.Similarity.cosine]] (qs3-validated form).
+  /** Two unrolled Lloyd steps of [[graft.sim.Ivf.fit]] (`k = 8,
+    * iters = 2`) over the 4096 lowest-id vectors: seeds = the 8
+    * lowest-id vectors, sample assignment under the (distance, cell)
+    * tie rule, id-ordered sequential float sums divided by the member
+    * count, an empty cell keeping its previous centroid; `cent` holds
+    * the fitted centroids. Shared by qs14 and qs16.
     */
-  /** qs6's oracle CTE fragment (`b`/`cand`/`sc`, no WITH and no final
-    * SELECT) — the multi-table LSH near-dup pair set, shared by qs6
-    * (pairs) and qs9 (connected components over those pairs).
-    */
-  /** qs16's oracle chain — the two-layer unrolled Lloyd fit (iters=2)
-    * ending in per-vector assignment `ca`, cell sizes `sz`, and the
-    * one-row smallest-cell target `tg` — shared with qx6's composite.
-    */
-  private lazy val balancedSampleCtes: String =
-    s"""seeds AS (SELECT embedding AS ce,
-            ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell
-          FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 8)),
+  private lazy val lloyd2Ctes: String =
+    s"""${cellSeedsCte("seeds", "embeddings", 8)},
         samp AS (SELECT vec_id, embedding FROM embeddings
           ORDER BY vec_id LIMIT 4096),
         a1 AS (SELECT vec_id, embedding, cell FROM (
@@ -98,7 +88,48 @@ object AdvancedQueries {
         c2d AS (SELECT c.cell, t.i, COALESCE(m2.cv, c.ce[t.i]) AS cv
           FROM c1 c CROSS JOIN range(1, $EmbeddingDim + 1) t(i)
           LEFT JOIN m2 ON m2.cell = c.cell AND m2.i = t.i),
-        cent AS (SELECT cell, list(cv ORDER BY i) AS ce FROM c2d GROUP BY cell),
+        cent AS (SELECT cell, list(cv ORDER BY i) AS ce FROM c2d GROUP BY cell)"""
+
+  /** IVF partial probe over `cent` (nprobe = 2): `ca` assigns every
+    * vector with its embedding, `qp` probes each query's 2 nearest
+    * cells, `iv` is the top-5 of the probed cells.
+    */
+  private lazy val ivfProbeArmCtes: String =
+    s"""ca AS (SELECT vec_id, embedding, cell FROM (
+          SELECT e.vec_id, e.embedding, c.cell,
+            ROW_NUMBER() OVER (PARTITION BY e.vec_id
+              ORDER BY ${l2sqSql("e.embedding", "c.ce")}, c.cell) AS rk
+          FROM embeddings e CROSS JOIN cent c) WHERE rk = 1),
+        qp AS (SELECT query_id, qe, cell FROM (
+          SELECT qv.query_id, qv.qe, c.cell,
+            ROW_NUMBER() OVER (PARTITION BY qv.query_id
+              ORDER BY ${l2sqSql("qv.qe", "c.ce")}, c.cell) AS rk
+          FROM qv CROSS JOIN cent c) WHERE rk <= 2),
+        iv0 AS (SELECT qp.query_id, ca.vec_id AS neighbor_id,
+            ${cosineSql("ca.embedding", "qp.qe")} AS cosine
+          FROM ca JOIN qp ON ca.cell = qp.cell AND ca.vec_id <> qp.query_id),
+        ${topKCte("iv", "iv0", 5)}"""
+
+  /** Recall of the `iv` arm against `br`, labelled `method`. */
+  private def ivfArmRecallSql(method: String): String =
+    s"""hit AS (SELECT iv.query_id, COUNT(*) AS n_hit
+          FROM iv JOIN br ON br.query_id = iv.query_id
+            AND br.neighbor_id = iv.neighbor_id
+          GROUP BY iv.query_id),
+        ex AS (SELECT query_id, COUNT(*) AS n_exact FROM br GROUP BY query_id)
+        SELECT '$method' AS method, ex.query_id,
+          CAST(COALESCE(hit.n_hit, 0) AS INT) AS n_hit,
+          CAST(ex.n_exact AS INT) AS n_exact,
+          CAST(COALESCE(hit.n_hit, 0) AS DOUBLE) / ex.n_exact AS recall
+        FROM ex LEFT JOIN hit ON hit.query_id = ex.query_id
+        ORDER BY ex.query_id"""
+
+  /** qs16's oracle chain — the two-layer unrolled Lloyd fit (iters=2)
+    * ending in per-vector assignment `ca`, cell sizes `sz`, and the
+    * one-row smallest-cell target `tg` — shared with qx6's composite.
+    */
+  private lazy val balancedSampleCtes: String =
+    s"""$lloyd2Ctes,
         ca AS (SELECT vec_id, cell FROM (
           SELECT e.vec_id, c.cell,
             ROW_NUMBER() OVER (PARTITION BY e.vec_id
@@ -112,6 +143,27 @@ object AdvancedQueries {
     """('0x' || substr(md5('cluster:' || CAST(ca.vec_id AS VARCHAR)), 1, 15))::BIGINT
             % sz.cell_n < tg.target_n"""
 
+  /** qs9's semantic-dedup labels over qs6's near-dup pairs (needs
+    * WITH RECURSIVE): `lab` maps every vector in a near-dup cluster to
+    * its cluster id, the cluster's smallest vec_id (the transitive
+    * closure of qd6). Shared by qs9 and the qx6/qx7 releases.
+    */
+  private lazy val nearDupLabelCtes: String =
+    s"""$lshNearDupCtes,
+        p AS (SELECT id_a, id_b FROM sc WHERE cosine >= 0.45),
+        und AS (SELECT id_a AS na, id_b AS nb FROM p
+          UNION ALL SELECT id_b AS na, id_a AS nb FROM p),
+        reach(na, nb) AS (
+          SELECT na, nb FROM und
+          UNION
+          SELECT r.na, u.nb FROM reach r JOIN und u ON r.nb = u.na),
+        lab AS (SELECT na AS vec_id, LEAST(na, MIN(nb)) AS cluster_id
+          FROM reach GROUP BY na)"""
+
+  /** qs6's oracle CTE fragment (`b`/`cand`/`sc`, no WITH and no final
+    * SELECT) — the multi-table LSH near-dup pair set, shared by qs6
+    * (pairs) and qs9 (connected components over those pairs).
+    */
   private lazy val lshNearDupCtes: String = {
     val nTables = 8
     val bucketCols = (0 until nTables).map(tb =>
@@ -155,23 +207,6 @@ object AdvancedQueries {
           JOIN b av ON av.vec_id = cand.id_a
           JOIN b bv ON bv.vec_id = cand.id_b)"""
   }
-
-  /** Exact squared L2 distance in DuckDB — same IEEE op sequence as
-    * [[graft.functions.NearestCell.compute]] / [[graft.sim.Ivf.l2sq]]
-    * (sequential `(a-b)^2` accumulation over dims).
-    */
-  private def l2sqSql(a: String, b: String): String =
-    s"""list_reduce(list_transform(range(1, ${EmbeddingDim + 1}),
-        i -> (CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE))
-           * (CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE))), (x, y) -> x + y)"""
-
-  private def cosineSql(a: String, b: String): String =
-    s"""list_reduce(list_transform(range(1, len($a) + 1),
-        i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)), (x, y) -> x + y)
-      / (sqrt(list_reduce(list_transform(range(1, len($a) + 1),
-          i -> CAST($a[i] AS DOUBLE) * CAST($a[i] AS DOUBLE)), (x, y) -> x + y))
-       * sqrt(list_reduce(list_transform(range(1, len($b) + 1),
-          i -> CAST($b[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)), (x, y) -> x + y)))"""
 
   /** Documents table dressed up as a media table: a real container magic
     * number (by doc_id mod 3) prepended to the utf-8 payload. Exercises
@@ -432,22 +467,13 @@ object AdvancedQueries {
           .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
           .orderBy(col("query_id"), col("rank"))
       },
-      Some("""WITH q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id >= 8 AND vec_id < 16),
+      Some(s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id >= 8 AND vec_id < 16),
         sc AS (
           SELECT q.query_id, e.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(e.embedding) + 1),
-              i -> CAST(e.embedding[i] AS DOUBLE) * CAST(q.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(q.qe) + 1),
-                i -> CAST(q.qe[i] AS DOUBLE) * CAST(q.qe[i] AS DOUBLE)), (x, y) -> x + y)))
+            ${cosineSql("e.embedding", "q.qe")}
             AS cosine
           FROM embeddings e, q WHERE e.vec_id <> q.query_id),
-        r AS (SELECT query_id, neighbor_id, cosine,
-          ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-          FROM sc)
-        SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id, cosine
-        FROM r WHERE rank <= 5 ORDER BY query_id, rank""")),
+        $rankedCosineTail""")),
 
     // ---- LSH ANN (hyperplane sign buckets): approximate vs brute
     // force, but DETERMINISTIC — the md5-parity hyperplanes are pure
@@ -472,11 +498,7 @@ object AdvancedQueries {
         sc AS (SELECT q.query_id, c.vec_id AS neighbor_id,
             ${cosineSql("c.embedding", "q.qe")} AS cosine
           FROM b c JOIN q ON c.bucket = q.qb AND c.vec_id <> q.query_id),
-        r AS (SELECT query_id, neighbor_id, cosine,
-          ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-          FROM sc)
-        SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id, cosine
-        FROM r WHERE rank <= 5 ORDER BY query_id, rank""")),
+        $rankedCosineTail""")),
 
     // ---- Multi-table LSH ANN (OR-amplification): exact-oracled like
     // qs4 — candidates share a bucket in ANY of the 8 plane families
@@ -511,11 +533,7 @@ object AdvancedQueries {
           FROM cand
           JOIN b cv ON cv.vec_id = cand.neighbor_id
           JOIN b qv ON qv.vec_id = cand.query_id),
-        r AS (SELECT query_id, neighbor_id, cosine,
-          ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-          FROM sc)
-        SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id, cosine
-        FROM r WHERE rank <= 5 ORDER BY query_id, rank"""
+        $rankedCosineTail"""
       }),
 
     // ---- Embedding near-dup at lake scale: the LSH-bucketed twin of
@@ -572,16 +590,7 @@ object AdvancedQueries {
           .orderBy(col("vec_id"))
       },
       Some {
-        s"""WITH RECURSIVE $lshNearDupCtes,
-        p AS (SELECT id_a, id_b FROM sc WHERE cosine >= 0.45),
-        und AS (SELECT id_a AS na, id_b AS nb FROM p
-          UNION ALL SELECT id_b AS na, id_a AS nb FROM p),
-        reach(na, nb) AS (
-          SELECT na, nb FROM und
-          UNION
-          SELECT r.na, u.nb FROM reach r JOIN und u ON r.nb = u.na),
-        lab AS (SELECT na AS vec_id, LEAST(na, MIN(nb)) AS cluster_id
-          FROM reach GROUP BY na),
+        s"""WITH RECURSIVE $nearDupLabelCtes,
         csz AS (SELECT cluster_id, COUNT(*) AS cluster_size
           FROM lab GROUP BY cluster_id)
         SELECT l.vec_id, l.cluster_id, c.cluster_size,
@@ -639,13 +648,8 @@ object AdvancedQueries {
           s"${lshBucketSql("embedding", planes = 4, table = tb)} AS b$tb").mkString(",\n          ")
         val mAliases = (0 until nTables).map(tb => s"b$tb AS qb$tb").mkString(", ")
         val mAnyMatch = (0 until nTables).map(tb => s"c.b$tb = mq.qb$tb").mkString(" OR ")
-        s"""WITH qv AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 4),
-        br0 AS (SELECT qv.query_id, e.vec_id AS neighbor_id,
-            ${cosineSql("e.embedding", "qv.qe")} AS cosine
-          FROM embeddings e, qv WHERE e.vec_id <> qv.query_id),
-        br AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM br0) WHERE rk <= 5),
+        s"""WITH $qvCte,
+        ${bruteCtes("embeddings", "e", 5)},
         sb AS (SELECT vec_id, embedding,
           ${lshBucketSql("embedding", planes = 6, table = 0)} AS bucket
           FROM embeddings),
@@ -654,9 +658,7 @@ object AdvancedQueries {
         ls0 AS (SELECT sq.query_id, c.vec_id AS neighbor_id,
             ${cosineSql("c.embedding", "sq.qe")} AS cosine
           FROM sb c JOIN sq ON c.bucket = sq.qb AND c.vec_id <> sq.query_id),
-        ls AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM ls0) WHERE rk <= 5),
+        ${topKCte("ls", "ls0", 5)},
         mb AS (SELECT vec_id, embedding,
           $mBucketCols
           FROM embeddings),
@@ -669,28 +671,9 @@ object AdvancedQueries {
           FROM mc
           JOIN mb cv ON cv.vec_id = mc.neighbor_id
           JOIN mb qv2 ON qv2.vec_id = mc.query_id),
-        ms AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM ms0) WHERE rk <= 5),
-        cent AS (SELECT embedding AS ce,
-            ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell
-          FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 8)),
-        ca AS (SELECT vec_id, embedding, cell FROM (
-          SELECT e.vec_id, e.embedding, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id
-              ORDER BY ${l2sqSql("e.embedding", "c.ce")}, c.cell) AS rk
-          FROM embeddings e CROSS JOIN cent c) WHERE rk = 1),
-        qp AS (SELECT query_id, qe, cell FROM (
-          SELECT qv.query_id, qv.qe, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY qv.query_id
-              ORDER BY ${l2sqSql("qv.qe", "c.ce")}, c.cell) AS rk
-          FROM qv CROSS JOIN cent c) WHERE rk <= 2),
-        iv0 AS (SELECT qp.query_id, ca.vec_id AS neighbor_id,
-            ${cosineSql("ca.embedding", "qp.qe")} AS cosine
-          FROM ca JOIN qp ON ca.cell = qp.cell AND ca.vec_id <> qp.query_id),
-        iv AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM iv0) WHERE rk <= 5),
+        ${topKCte("ms", "ms0", 5)},
+        ${cellSeedsCte("cent", "embeddings", 8)},
+        $ivfProbeArmCtes,
         allarms AS (
           SELECT 'brute' AS method, query_id, neighbor_id FROM br
           UNION ALL SELECT 'ivf_full', query_id, neighbor_id FROM br
@@ -754,17 +737,9 @@ object AdvancedQueries {
           .orderBy(col("query_id"))
       },
       Some {
-        s"""WITH qv AS (SELECT vec_id AS query_id, embedding AS qe
-          FROM embeddings WHERE vec_id < 4),
-        br0 AS (SELECT qv.query_id, e.vec_id AS neighbor_id,
-            ${cosineSql("e.embedding", "qv.qe")} AS cosine
-          FROM embeddings e, qv WHERE e.vec_id <> qv.query_id),
-        br AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM br0) WHERE rk <= 5),
-        seeds AS (SELECT embedding AS ce,
-            ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell
-          FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 8)),
+        s"""WITH $qvCte,
+        ${bruteCtes("embeddings", "e", 5)},
+        ${cellSeedsCte("seeds", "embeddings", 8)},
         samp AS (SELECT vec_id, embedding FROM embeddings
           ORDER BY vec_id LIMIT 4096),
         a1 AS (SELECT vec_id, embedding, cell FROM (
@@ -783,33 +758,8 @@ object AdvancedQueries {
           FROM seeds s CROSS JOIN range(1, $EmbeddingDim + 1) t(i)
           LEFT JOIN m1 ON m1.cell = s.cell AND m1.i = t.i),
         cent AS (SELECT cell, list(cv ORDER BY i) AS ce FROM cent1 GROUP BY cell),
-        ca AS (SELECT vec_id, embedding, cell FROM (
-          SELECT e.vec_id, e.embedding, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id
-              ORDER BY ${l2sqSql("e.embedding", "c.ce")}, c.cell) AS rk
-          FROM embeddings e CROSS JOIN cent c) WHERE rk = 1),
-        qp AS (SELECT query_id, qe, cell FROM (
-          SELECT qv.query_id, qv.qe, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY qv.query_id
-              ORDER BY ${l2sqSql("qv.qe", "c.ce")}, c.cell) AS rk
-          FROM qv CROSS JOIN cent c) WHERE rk <= 2),
-        iv0 AS (SELECT qp.query_id, ca.vec_id AS neighbor_id,
-            ${cosineSql("ca.embedding", "qp.qe")} AS cosine
-          FROM ca JOIN qp ON ca.cell = qp.cell AND ca.vec_id <> qp.query_id),
-        iv AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM iv0) WHERE rk <= 5),
-        hit AS (SELECT iv.query_id, COUNT(*) AS n_hit
-          FROM iv JOIN br ON br.query_id = iv.query_id
-            AND br.neighbor_id = iv.neighbor_id
-          GROUP BY iv.query_id),
-        ex AS (SELECT query_id, COUNT(*) AS n_exact FROM br GROUP BY query_id)
-        SELECT 'ivf_lloyd1_probe2' AS method, ex.query_id,
-          CAST(COALESCE(hit.n_hit, 0) AS INT) AS n_hit,
-          CAST(ex.n_exact AS INT) AS n_exact,
-          CAST(COALESCE(hit.n_hit, 0) AS DOUBLE) / ex.n_exact AS recall
-        FROM ex LEFT JOIN hit ON hit.query_id = ex.query_id
-        ORDER BY ex.query_id"""
+        $ivfProbeArmCtes,
+        ${ivfArmRecallSql("ivf_lloyd1_probe2")}"""
       }),
 
     // ---- ANN recall of the MULTI-iteration Lloyd fit — the default
@@ -842,77 +792,11 @@ object AdvancedQueries {
           .orderBy(col("query_id"))
       },
       Some {
-        s"""WITH qv AS (SELECT vec_id AS query_id, embedding AS qe
-          FROM embeddings WHERE vec_id < 4),
-        br0 AS (SELECT qv.query_id, e.vec_id AS neighbor_id,
-            ${cosineSql("e.embedding", "qv.qe")} AS cosine
-          FROM embeddings e, qv WHERE e.vec_id <> qv.query_id),
-        br AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM br0) WHERE rk <= 5),
-        seeds AS (SELECT embedding AS ce,
-            ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell
-          FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 8)),
-        samp AS (SELECT vec_id, embedding FROM embeddings
-          ORDER BY vec_id LIMIT 4096),
-        a1 AS (SELECT vec_id, embedding, cell FROM (
-          SELECT s.vec_id, s.embedding, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY s.vec_id
-              ORDER BY ${l2sqSql("s.embedding", "c.ce")}, c.cell) AS rk
-          FROM samp s CROSS JOIN seeds c) WHERE rk = 1),
-        a1d AS (SELECT a1.cell, a1.vec_id, t.i,
-            CAST(a1.embedding[t.i] AS DOUBLE) AS v
-          FROM a1, range(1, $EmbeddingDim + 1) t(i)),
-        m1 AS (SELECT cell, i,
-            list_reduce(list(v ORDER BY vec_id), (x, y) -> x + y) / COUNT(*) AS cv
-          FROM a1d GROUP BY cell, i),
-        c1d AS (SELECT s.cell, t.i,
-            COALESCE(m1.cv, CAST(s.ce[t.i] AS DOUBLE)) AS cv
-          FROM seeds s CROSS JOIN range(1, $EmbeddingDim + 1) t(i)
-          LEFT JOIN m1 ON m1.cell = s.cell AND m1.i = t.i),
-        c1 AS (SELECT cell, list(cv ORDER BY i) AS ce FROM c1d GROUP BY cell),
-        a2 AS (SELECT vec_id, embedding, cell FROM (
-          SELECT s.vec_id, s.embedding, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY s.vec_id
-              ORDER BY ${l2sqSql("s.embedding", "c.ce")}, c.cell) AS rk
-          FROM samp s CROSS JOIN c1 c) WHERE rk = 1),
-        a2d AS (SELECT a2.cell, a2.vec_id, t.i,
-            CAST(a2.embedding[t.i] AS DOUBLE) AS v
-          FROM a2, range(1, $EmbeddingDim + 1) t(i)),
-        m2 AS (SELECT cell, i,
-            list_reduce(list(v ORDER BY vec_id), (x, y) -> x + y) / COUNT(*) AS cv
-          FROM a2d GROUP BY cell, i),
-        c2d AS (SELECT c.cell, t.i, COALESCE(m2.cv, c.ce[t.i]) AS cv
-          FROM c1 c CROSS JOIN range(1, $EmbeddingDim + 1) t(i)
-          LEFT JOIN m2 ON m2.cell = c.cell AND m2.i = t.i),
-        cent AS (SELECT cell, list(cv ORDER BY i) AS ce FROM c2d GROUP BY cell),
-        ca AS (SELECT vec_id, embedding, cell FROM (
-          SELECT e.vec_id, e.embedding, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id
-              ORDER BY ${l2sqSql("e.embedding", "c.ce")}, c.cell) AS rk
-          FROM embeddings e CROSS JOIN cent c) WHERE rk = 1),
-        qp AS (SELECT query_id, qe, cell FROM (
-          SELECT qv.query_id, qv.qe, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY qv.query_id
-              ORDER BY ${l2sqSql("qv.qe", "c.ce")}, c.cell) AS rk
-          FROM qv CROSS JOIN cent c) WHERE rk <= 2),
-        iv0 AS (SELECT qp.query_id, ca.vec_id AS neighbor_id,
-            ${cosineSql("ca.embedding", "qp.qe")} AS cosine
-          FROM ca JOIN qp ON ca.cell = qp.cell AND ca.vec_id <> qp.query_id),
-        iv AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM iv0) WHERE rk <= 5),
-        hit AS (SELECT iv.query_id, COUNT(*) AS n_hit
-          FROM iv JOIN br ON br.query_id = iv.query_id
-            AND br.neighbor_id = iv.neighbor_id
-          GROUP BY iv.query_id),
-        ex AS (SELECT query_id, COUNT(*) AS n_exact FROM br GROUP BY query_id)
-        SELECT 'ivf_lloyd2_probe2' AS method, ex.query_id,
-          CAST(COALESCE(hit.n_hit, 0) AS INT) AS n_hit,
-          CAST(ex.n_exact AS INT) AS n_exact,
-          CAST(COALESCE(hit.n_hit, 0) AS DOUBLE) / ex.n_exact AS recall
-        FROM ex LEFT JOIN hit ON hit.query_id = ex.query_id
-        ORDER BY ex.query_id"""
+        s"""WITH $qvCte,
+        ${bruteCtes("embeddings", "e", 5)},
+        $lloyd2Ctes,
+        $ivfProbeArmCtes,
+        ${ivfArmRecallSql("ivf_lloyd2_probe2")}"""
       }),
 
     // ---- cluster-balanced sampling (Ivf.balancedSample): k-means
@@ -989,31 +873,11 @@ object AdvancedQueries {
           .orderBy(col("vec_id"))
       },
       Some {
-        s"""WITH RECURSIVE $lshNearDupCtes,
-        p AS (SELECT id_a, id_b FROM sc WHERE cosine >= 0.45),
-        und AS (SELECT id_a AS na, id_b AS nb FROM p
-          UNION ALL SELECT id_b AS na, id_a AS nb FROM p),
-        reach(na, nb) AS (
-          SELECT na, nb FROM und
-          UNION
-          SELECT r.na, u.nb FROM reach r JOIN und u ON r.nb = u.na),
-        lab AS (SELECT na AS vec_id, LEAST(na, MIN(nb)) AS cluster_id
-          FROM reach GROUP BY na),
+        s"""WITH RECURSIVE $nearDupLabelCtes,
         $balancedSampleCtes,
-        pseeds AS (SELECT embedding, ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS code
-          FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 256)),
-        pcb AS (SELECT t.j, s.code,
-            list_slice(s.embedding, t.j * 4 + 1, t.j * 4 + 4) AS ce
-          FROM pseeds s CROSS JOIN range(0, 16) t(j)),
-        penc AS (SELECT vec_id, j, code FROM (
-          SELECT e.vec_id, pcb.j, pcb.code,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id, pcb.j ORDER BY
-              list_reduce(list_transform(range(1, 5),
-                i -> (CAST(e.embedding[CAST(pcb.j * 4 + i AS INT)] AS DOUBLE) - CAST(pcb.ce[i] AS DOUBLE))
-                   * (CAST(e.embedding[CAST(pcb.j * 4 + i AS INT)] AS DOUBLE) - CAST(pcb.ce[i] AS DOUBLE))),
-                (x, y) -> x + y),
-              pcb.code) AS rk
-          FROM embeddings e CROSS JOIN pcb) WHERE rk = 1),
+        ${codeSeedsCte("pseeds", "embeddings", 256)},
+        ${codebookCte("pcb", "pseeds", 16, 4)},
+        ${encodeCte("penc", "embeddings", "e", "pcb", 4)},
         pc AS (SELECT vec_id,
             string_agg(CAST(code AS VARCHAR), ',' ORDER BY j) AS pq_csv
           FROM penc GROUP BY vec_id)
@@ -1078,35 +942,22 @@ object AdvancedQueries {
           .orderBy(col("query_id"), col("rank"))
       },
       Some {
-        s"""WITH RECURSIVE $lshNearDupCtes,
-        p AS (SELECT id_a, id_b FROM sc WHERE cosine >= 0.45),
-        und AS (SELECT id_a AS na, id_b AS nb FROM p
-          UNION ALL SELECT id_b AS na, id_a AS nb FROM p),
-        reach(na, nb) AS (
-          SELECT na, nb FROM und
-          UNION
-          SELECT r.na, u.nb FROM reach r JOIN und u ON r.nb = u.na),
-        lab AS (SELECT na AS vec_id, LEAST(na, MIN(nb)) AS cluster_id
-          FROM reach GROUP BY na),
+        s"""WITH RECURSIVE $nearDupLabelCtes,
         $balancedSampleCtes,
         rel AS (SELECT ca.vec_id
           FROM ca JOIN sz ON sz.cell = ca.cell CROSS JOIN tg
           LEFT JOIN lab l ON l.vec_id = ca.vec_id
           WHERE COALESCE(l.vec_id = l.cluster_id, TRUE)
             AND ($balancedKeepSql)),
-        qv AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 4),
-        vseeds AS (SELECT embedding, ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS code
-          FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 256)),
+        $qvCte,
+        ${codeSeedsCte("vseeds", "embeddings", 256)},
         vcb AS (SELECT t.j, s.code,
             list_slice(s.embedding, t.j * 4 + 1, t.j * 4 + 4) AS pe
           FROM vseeds s CROSS JOIN range(0, 16) t(j)),
         venc AS (SELECT vec_id, j, code FROM (
           SELECT e.vec_id, vcb.j, vcb.code,
             ROW_NUMBER() OVER (PARTITION BY e.vec_id, vcb.j ORDER BY
-              list_reduce(list_transform(range(1, 5),
-                i -> (CAST(e.embedding[CAST(vcb.j * 4 + i AS INT)] AS DOUBLE) - CAST(vcb.pe[i] AS DOUBLE))
-                   * (CAST(e.embedding[CAST(vcb.j * 4 + i AS INT)] AS DOUBLE) - CAST(vcb.pe[i] AS DOUBLE))),
-                (x, y) -> x + y),
+              ${subL2sqSql("e.embedding", "vcb.j * 4", "vcb.pe", 4)},
               vcb.code) AS rk
           FROM embeddings e JOIN rel ON rel.vec_id = e.vec_id
           CROSS JOIN vcb) WHERE rk = 1),
@@ -1121,10 +972,7 @@ object AdvancedQueries {
             ROW_NUMBER() OVER (PARTITION BY qv.query_id
               ORDER BY ${l2sqSql("qv.qe", "c.ce")}, c.cell) AS rk
           FROM qv CROSS JOIN seeds c) WHERE rk <= 4),
-        qn AS (SELECT query_id,
-            list_reduce(list_transform(range(1, len(qe) + 1),
-              i -> CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE)), (x, y) -> x + y) AS qnsq
-          FROM qv),
+        $qnCte,
         spj AS (SELECT venc.vec_id, sqp.query_id, venc.j,
             list_reduce(list_transform(range(1, 5),
               i -> CAST(sqp.qe[CAST(venc.j * 4 + i AS INT)] AS DOUBLE) * CAST(vcb.pe[i] AS DOUBLE)),
@@ -1139,13 +987,8 @@ object AdvancedQueries {
             list_reduce(list(dotj ORDER BY j), (x, y) -> x + y) AS num,
             list_reduce(list(nrmj ORDER BY j), (x, y) -> x + y) AS rn
           FROM spj GROUP BY vec_id, query_id),
-        sp1 AS (SELECT sp0.query_id, sp0.neighbor_id,
-            num / (sqrt(rn) * sqrt(qn.qnsq)) AS cosine
-          FROM sp0 JOIN qn ON qn.query_id = sp0.query_id)
-        SELECT query_id, neighbor_id, CAST(rk AS INT) AS rank FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM sp1) WHERE rk <= 5
-        ORDER BY query_id, rank"""
+        ${adcCosineCte("s")}
+        ${rankedTopKSql("sp1", 5)}"""
       }),
 
     // ---- MULTIMODAL release verdict (qx8): the cross-modality

@@ -11,6 +11,8 @@ import graft.model.Tables
 import graft.sim.{Ivf, Similarity}
 import graft.text.TextOps
 
+import OracleSql._
+
 /** Training-data pipeline operators over `documents` / `embeddings`:
   * text analysis, dedup (exact / token-set / MinHash-LSH / SimHash /
   * n-gram Jaccard) and embedding similarity search, each with a DuckDB
@@ -570,33 +572,34 @@ object DataOpsQueries {
             COALESCE(s.lm_score > th.t1, FALSE) AS quality_keep
           FROM scs s LEFT JOIN th ON th.lang = s.lang)"""
 
-  /** qs34's closed-form occupancy/refit oracle — shared VERBATIM by
-    * its streaming twin qst22 (the strongest streaming≡batch pin).
+  /** The drift fixture's arriving batch: centroid seeds `seeds` (the 8
+    * lowest-id `old` vectors), and `batd`, the `bat` vectors pulled 90%
+    * of the way onto seed 0 (`czero`) — one dense region of arrivals.
     */
-  private lazy val qs34OracleSql: String = """WITH old AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 8 <> 0),
-        bat AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 8 = 0),
-        seeds AS (SELECT embedding AS ce, ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell
-          FROM (SELECT vec_id, embedding FROM old ORDER BY vec_id LIMIT 8)),
+  private def driftedBatchCtes(seeds: String, bat: String): String =
+    s"""${cellSeedsCte(seeds, "old", 8)},
         czero AS (SELECT list_transform(ce, x -> CAST(x AS DOUBLE)) AS c0d
-          FROM seeds WHERE cell = 0),
+          FROM $seeds WHERE cell = 0),
         batd AS (SELECT b.vec_id,
             list_transform(range(1, len(b.embedding) + 1),
               i -> CAST(CAST(b.embedding[i] AS DOUBLE) * 0.1 + czero.c0d[i] * 0.9 AS FLOAT)) AS embedding
-          FROM bat b, czero),
-        ao AS (SELECT vec_id, cell FROM (
-          SELECT o.vec_id, c.cell, ROW_NUMBER() OVER (PARTITION BY o.vec_id
-            ORDER BY list_reduce(list_transform(range(1, len(o.embedding) + 1),
-              i -> (CAST(o.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))
-                 * (CAST(o.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))), (x, y) -> x + y),
+          FROM $bat b, czero)"""
+
+  /** qs34's closed-form occupancy/refit oracle — shared VERBATIM by
+    * its streaming twin qst22 (the strongest streaming≡batch pin).
+    */
+  private lazy val qs34OracleSql: String = {
+    def assign(name: String, table: String, a: String) =
+      s"""$name AS (SELECT vec_id, cell FROM (
+          SELECT $a.vec_id, c.cell, ROW_NUMBER() OVER (PARTITION BY $a.vec_id
+            ORDER BY ${l2sqLenSql(s"$a.embedding", "c.ce")},
               c.cell) AS rk
-          FROM old o CROSS JOIN seeds c) q WHERE rk = 1),
-        ab AS (SELECT vec_id, cell FROM (
-          SELECT b.vec_id, c.cell, ROW_NUMBER() OVER (PARTITION BY b.vec_id
-            ORDER BY list_reduce(list_transform(range(1, len(b.embedding) + 1),
-              i -> (CAST(b.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))
-                 * (CAST(b.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))), (x, y) -> x + y),
-              c.cell) AS rk
-          FROM batd b CROSS JOIN seeds c) q WHERE rk = 1),
+          FROM $table $a CROSS JOIN seeds c) q WHERE rk = 1)"""
+    s"""WITH old AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 8 <> 0),
+        bat AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 8 = 0),
+        ${driftedBatchCtes("seeds", "bat")},
+        ${assign("ao", "old", "o")},
+        ${assign("ab", "batd", "b")},
         occ AS (SELECT cell, CAST(SUM(in_fit) AS BIGINT) AS n_fit,
             CAST(COUNT(*) AS BIGINT) AS n_now
           FROM (SELECT cell, 1 AS in_fit FROM ao
@@ -609,154 +612,46 @@ object DataOpsQueries {
           (2 * tot.mf * 8 >= 3 * tot.tf) AS refit_at_fit,
           (2 * tot.mn * 8 >= 3 * tot.tn) AS refit
         FROM occ, tot ORDER BY occ.cell"""
+  }
 
   /** qs35/qs36's shared drift-fixture CTEs: the qs34 dressed batch,
     * the drifted union, the both-region query set, and the
     * brute-force truth. */
-  private lazy val ivfDriftFixtureCtes: String = """old AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 8 <> 0),
-        oseeds AS (SELECT embedding AS ce, ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell
-          FROM (SELECT vec_id, embedding FROM old ORDER BY vec_id LIMIT 8)),
-        czero AS (SELECT list_transform(ce, x -> CAST(x AS DOUBLE)) AS c0d
-          FROM oseeds WHERE cell = 0),
-        batd AS (SELECT b.vec_id,
-            list_transform(range(1, len(b.embedding) + 1),
-              i -> CAST(CAST(b.embedding[i] AS DOUBLE) * 0.1 + czero.c0d[i] * 0.9 AS FLOAT)) AS embedding
-          FROM (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 8 = 0) b, czero),
+  private lazy val ivfDriftFixtureCtes: String = s"""old AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 8 <> 0),
+        ${driftedBatchCtes("oseeds",
+          "(SELECT vec_id, embedding FROM embeddings WHERE vec_id % 8 = 0)")},
         ud AS (SELECT vec_id, embedding FROM old
           UNION ALL SELECT vec_id, embedding FROM batd),
         qv AS (SELECT vec_id AS query_id, embedding AS qe FROM ud
           WHERE vec_id < 4 OR (vec_id % 8 = 0 AND vec_id < 32)),
-        qn AS (SELECT query_id,
-            list_reduce(list_transform(range(1, len(qe) + 1),
-              i -> CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE)), (x, y) -> x + y) AS qnsq
-          FROM qv),
-        br0 AS (SELECT qv.query_id, u.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(u.embedding) + 1),
-              i -> CAST(u.embedding[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(u.embedding) + 1),
-                i -> CAST(u.embedding[i] AS DOUBLE) * CAST(u.embedding[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> CAST(qv.qe[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)))
-            AS cosine
-          FROM ud u, qv WHERE u.vec_id <> qv.query_id),
-        br AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM br0) WHERE rk <= 5)"""
+        $qnCte,
+        ${bruteCtes("ud", "u", 5)}"""
 
   /** qs35's FROZEN serving arm (old-corpus models over the drifted
     * union — the qs27 ADC chain). */
-  private lazy val ivfFrozenArmCtes: String = """opseeds AS (SELECT embedding, ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS code
-          FROM (SELECT vec_id, embedding FROM old ORDER BY vec_id LIMIT 256)),
-        ocb AS (SELECT t.j, s.code,
-            list_slice(s.embedding, t.j * 4 + 1, t.j * 4 + 4) AS ce
-          FROM opseeds s CROSS JOIN range(0, 16) t(j)),
-        oenc AS (SELECT vec_id, j, code FROM (
-          SELECT u.vec_id, cb.j, cb.code,
-            ROW_NUMBER() OVER (PARTITION BY u.vec_id, cb.j ORDER BY
-              list_reduce(list_transform(range(1, 5),
-                i -> (CAST(u.embedding[CAST(cb.j * 4 + i AS INT)] AS DOUBLE) - CAST(cb.ce[i] AS DOUBLE))
-                   * (CAST(u.embedding[CAST(cb.j * 4 + i AS INT)] AS DOUBLE) - CAST(cb.ce[i] AS DOUBLE))),
-                (x, y) -> x + y),
-              cb.code) AS rk
-          FROM ud u CROSS JOIN ocb cb) WHERE rk = 1),
-        oca AS (SELECT vec_id, cell FROM (
-          SELECT u.vec_id, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY u.vec_id ORDER BY
-              list_reduce(list_transform(range(1, len(u.embedding) + 1),
-                i -> (CAST(u.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))
-                   * (CAST(u.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))), (x, y) -> x + y),
-              c.cell) AS rk
-          FROM ud u CROSS JOIN oseeds c) WHERE rk = 1),
-        oqp AS (SELECT query_id, qe, cell FROM (
-          SELECT qv.query_id, qv.qe, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY qv.query_id ORDER BY
-              list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> (CAST(qv.qe[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))
-                   * (CAST(qv.qe[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))), (x, y) -> x + y),
-              c.cell) AS rk
-          FROM qv CROSS JOIN oseeds c) WHERE rk <= 4),
-        opj AS (SELECT enc.vec_id, qp.query_id, enc.j,
-            list_reduce(list_transform(range(1, 5),
-              i -> CAST(qp.qe[CAST(enc.j * 4 + i AS INT)] AS DOUBLE) * CAST(cb.ce[i] AS DOUBLE)),
-              (x, y) -> x + y) AS dotj,
-            list_reduce(list_transform(range(1, 5),
-              i -> CAST(cb.ce[i] AS DOUBLE) * CAST(cb.ce[i] AS DOUBLE)),
-              (x, y) -> x + y) AS nrmj
-          FROM oenc enc JOIN ocb cb ON cb.j = enc.j AND cb.code = enc.code
-          JOIN oca ca ON ca.vec_id = enc.vec_id
-          JOIN oqp qp ON qp.cell = ca.cell AND enc.vec_id <> qp.query_id),
-        op0 AS (SELECT vec_id AS neighbor_id, query_id,
-            list_reduce(list(dotj ORDER BY j), (x, y) -> x + y) AS num,
-            list_reduce(list(nrmj ORDER BY j), (x, y) -> x + y) AS rn
-          FROM opj GROUP BY vec_id, query_id),
-        op1 AS (SELECT op0.query_id, op0.neighbor_id,
-            num / (sqrt(rn) * sqrt(qn.qnsq)) AS cosine
-          FROM op0 JOIN qn ON qn.query_id = op0.query_id),
-        op5 AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM op1) WHERE rk <= 5),
-        ohit AS (SELECT a.query_id, COUNT(*) AS n_hit FROM op5 a
-          JOIN br ON br.query_id = a.query_id AND br.neighbor_id = a.neighbor_id
-          GROUP BY a.query_id)"""
+  private lazy val ivfFrozenArmCtes: String = s"""${codeSeedsCte("opseeds", "old", 256)},
+        ${codebookCte("ocb", "opseeds", 16, 4)},
+        ${encodeCte("oenc", "ud", "u", "ocb cb", 4)},
+        ${cellCte("oca", "ud", "u", "oseeds")},
+        ${probeCte("oqp", "oseeds", 4)},
+        ${adcCtes("o", "qp", "JOIN oca ca ON ca.vec_id = enc.vec_id JOIN oqp qp ON qp.cell = ca.cell AND enc.vec_id <> qp.query_id")},
+        ${adcCosineCte("o")},
+        ${topKCte("op5", "op1", 5)},
+        ${hitCte("ohit", "op5")}"""
 
   /** The seed-fit REFIT arm (coarse cells + PQ codebooks re-seeded
     * from the drifted union), shared by qs35 and qs36 — qs36's Lloyd
     * arm reuses its nseeds/nca/nqp cell chain. */
-  private lazy val ivfRefitSeedArmCtes: String = """nseeds AS (SELECT embedding AS ce, ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell
-          FROM (SELECT vec_id, embedding FROM ud ORDER BY vec_id LIMIT 8)),
-        npseeds AS (SELECT embedding, ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS code
-          FROM (SELECT vec_id, embedding FROM ud ORDER BY vec_id LIMIT 256)),
-        ncb AS (SELECT t.j, s.code,
-            list_slice(s.embedding, t.j * 4 + 1, t.j * 4 + 4) AS ce
-          FROM npseeds s CROSS JOIN range(0, 16) t(j)),
-        nenc AS (SELECT vec_id, j, code FROM (
-          SELECT u.vec_id, cb.j, cb.code,
-            ROW_NUMBER() OVER (PARTITION BY u.vec_id, cb.j ORDER BY
-              list_reduce(list_transform(range(1, 5),
-                i -> (CAST(u.embedding[CAST(cb.j * 4 + i AS INT)] AS DOUBLE) - CAST(cb.ce[i] AS DOUBLE))
-                   * (CAST(u.embedding[CAST(cb.j * 4 + i AS INT)] AS DOUBLE) - CAST(cb.ce[i] AS DOUBLE))),
-                (x, y) -> x + y),
-              cb.code) AS rk
-          FROM ud u CROSS JOIN ncb cb) WHERE rk = 1),
-        nca AS (SELECT vec_id, cell FROM (
-          SELECT u.vec_id, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY u.vec_id ORDER BY
-              list_reduce(list_transform(range(1, len(u.embedding) + 1),
-                i -> (CAST(u.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))
-                   * (CAST(u.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))), (x, y) -> x + y),
-              c.cell) AS rk
-          FROM ud u CROSS JOIN nseeds c) WHERE rk = 1),
-        nqp AS (SELECT query_id, qe, cell FROM (
-          SELECT qv.query_id, qv.qe, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY qv.query_id ORDER BY
-              list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> (CAST(qv.qe[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))
-                   * (CAST(qv.qe[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))), (x, y) -> x + y),
-              c.cell) AS rk
-          FROM qv CROSS JOIN nseeds c) WHERE rk <= 4),
-        npj AS (SELECT enc.vec_id, qp.query_id, enc.j,
-            list_reduce(list_transform(range(1, 5),
-              i -> CAST(qp.qe[CAST(enc.j * 4 + i AS INT)] AS DOUBLE) * CAST(cb.ce[i] AS DOUBLE)),
-              (x, y) -> x + y) AS dotj,
-            list_reduce(list_transform(range(1, 5),
-              i -> CAST(cb.ce[i] AS DOUBLE) * CAST(cb.ce[i] AS DOUBLE)),
-              (x, y) -> x + y) AS nrmj
-          FROM nenc enc JOIN ncb cb ON cb.j = enc.j AND cb.code = enc.code
-          JOIN nca ca ON ca.vec_id = enc.vec_id
-          JOIN nqp qp ON qp.cell = ca.cell AND enc.vec_id <> qp.query_id),
-        np0 AS (SELECT vec_id AS neighbor_id, query_id,
-            list_reduce(list(dotj ORDER BY j), (x, y) -> x + y) AS num,
-            list_reduce(list(nrmj ORDER BY j), (x, y) -> x + y) AS rn
-          FROM npj GROUP BY vec_id, query_id),
-        np1 AS (SELECT np0.query_id, np0.neighbor_id,
-            num / (sqrt(rn) * sqrt(qn.qnsq)) AS cosine
-          FROM np0 JOIN qn ON qn.query_id = np0.query_id),
-        np5 AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM np1) WHERE rk <= 5),
-        nhit AS (SELECT a.query_id, COUNT(*) AS n_hit FROM np5 a
-          JOIN br ON br.query_id = a.query_id AND br.neighbor_id = a.neighbor_id
-          GROUP BY a.query_id)"""
+  private lazy val ivfRefitSeedArmCtes: String = s"""${cellSeedsCte("nseeds", "ud", 8)},
+        ${codeSeedsCte("npseeds", "ud", 256)},
+        ${codebookCte("ncb", "npseeds", 16, 4)},
+        ${encodeCte("nenc", "ud", "u", "ncb cb", 4)},
+        ${cellCte("nca", "ud", "u", "nseeds")},
+        ${probeCte("nqp", "nseeds", 4)},
+        ${adcCtes("n", "qp", "JOIN nca ca ON ca.vec_id = enc.vec_id JOIN nqp qp ON qp.cell = ca.cell AND enc.vec_id <> qp.query_id")},
+        ${adcCosineCte("n")},
+        ${topKCte("np5", "np1", 5)},
+        ${hitCte("nhit", "np5")}"""
 
   /** qs36's Lloyd-refined PQ refit arm, GENERATED per subspace (the
     * qs19/pqLloydOracleSql pattern at serving-grade m=16 × k=256 ×
@@ -770,68 +665,13 @@ object DataOpsQueries {
     * arm's `nca`/`nqp` cell assignment (both arms serve the same
     * iters=0 coarse cells, isolating the codebook lever).
     */
-  private lazy val ivfRefitLloydArmCtes: String = {
-    val perSub = (0 until 16).map { j =>
-      val o = j * 4
-      s"""lscb_$j AS (SELECT code, list_slice(embedding, ${o + 1}, ${o + 4}) AS ce FROM npseeds),
-        la1_$j AS (SELECT vec_id, sub, code FROM (
-          SELECT s.vec_id, list_slice(s.embedding, ${o + 1}, ${o + 4}) AS sub, sc.code,
-            ROW_NUMBER() OVER (PARTITION BY s.vec_id ORDER BY
-              list_reduce(list_transform(range(1, 5),
-                i -> (CAST(s.embedding[CAST($o + i AS INT)] AS DOUBLE) - CAST(sc.ce[i] AS DOUBLE))
-                   * (CAST(s.embedding[CAST($o + i AS INT)] AS DOUBLE) - CAST(sc.ce[i] AS DOUBLE))),
-                (x, y) -> x + y),
-              sc.code) AS rk
-          FROM lsamp s CROSS JOIN lscb_$j sc) WHERE rk = 1),
-        la1d_$j AS (SELECT a.code, a.vec_id, t.i, CAST(a.sub[t.i] AS DOUBLE) AS v
-          FROM la1_$j a, range(1, 5) t(i)),
-        lm1_$j AS (SELECT code, i,
-            list_reduce(list(v ORDER BY vec_id), (x, y) -> x + y) / COUNT(*) AS cv
-          FROM la1d_$j GROUP BY code, i),
-        lc1d_$j AS (SELECT sc.code, t.i, COALESCE(m.cv, CAST(sc.ce[t.i] AS DOUBLE)) AS cv
-          FROM lscb_$j sc CROSS JOIN range(1, 5) t(i)
-          LEFT JOIN lm1_$j m ON m.code = sc.code AND m.i = t.i),
-        lc1_$j AS (SELECT code, list(cv ORDER BY i) AS ce FROM lc1d_$j GROUP BY code)"""
-    }.mkString(",\n        ")
-    val cbUnion = (0 until 16)
-      .map(j => s"SELECT $j AS j, code, ce FROM lc1_$j")
-      .mkString(" UNION ALL ")
-    s"""lsamp AS (SELECT vec_id, embedding FROM ud ORDER BY vec_id LIMIT 4096),
-        $perSub,
-        lcb AS ($cbUnion),
-        lenc AS (SELECT vec_id, j, code FROM (
-          SELECT u.vec_id, cb.j, cb.code,
-            ROW_NUMBER() OVER (PARTITION BY u.vec_id, cb.j ORDER BY
-              list_reduce(list_transform(range(1, 5),
-                i -> (CAST(u.embedding[CAST(cb.j * 4 + i AS INT)] AS DOUBLE) - CAST(cb.ce[i] AS DOUBLE))
-                   * (CAST(u.embedding[CAST(cb.j * 4 + i AS INT)] AS DOUBLE) - CAST(cb.ce[i] AS DOUBLE))),
-                (x, y) -> x + y),
-              cb.code) AS rk
-          FROM ud u CROSS JOIN lcb cb) WHERE rk = 1),
-        lpj AS (SELECT enc.vec_id, qp.query_id, enc.j,
-            list_reduce(list_transform(range(1, 5),
-              i -> CAST(qp.qe[CAST(enc.j * 4 + i AS INT)] AS DOUBLE) * CAST(cb.ce[i] AS DOUBLE)),
-              (x, y) -> x + y) AS dotj,
-            list_reduce(list_transform(range(1, 5),
-              i -> CAST(cb.ce[i] AS DOUBLE) * CAST(cb.ce[i] AS DOUBLE)),
-              (x, y) -> x + y) AS nrmj
-          FROM lenc enc JOIN lcb cb ON cb.j = enc.j AND cb.code = enc.code
-          JOIN nca ca ON ca.vec_id = enc.vec_id
-          JOIN nqp qp ON qp.cell = ca.cell AND enc.vec_id <> qp.query_id),
-        lp0 AS (SELECT vec_id AS neighbor_id, query_id,
-            list_reduce(list(dotj ORDER BY j), (x, y) -> x + y) AS num,
-            list_reduce(list(nrmj ORDER BY j), (x, y) -> x + y) AS rn
-          FROM lpj GROUP BY vec_id, query_id),
-        lp1 AS (SELECT lp0.query_id, lp0.neighbor_id,
-            num / (sqrt(rn) * sqrt(qn.qnsq)) AS cosine
-          FROM lp0 JOIN qn ON qn.query_id = lp0.query_id),
-        lp5 AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM lp1) WHERE rk <= 5),
-        lhit AS (SELECT a.query_id, COUNT(*) AS n_hit FROM lp5 a
-          JOIN br ON br.query_id = a.query_id AND br.neighbor_id = a.neighbor_id
-          GROUP BY a.query_id)"""
-  }
+  private lazy val ivfRefitLloydArmCtes: String =
+    s"""${pqLloydCtes("l", "ud", "npseeds", 16, 4, "lcb")},
+        ${encodeCte("lenc", "ud", "u", "lcb cb", 4)},
+        ${adcCtes("l", "qp", "JOIN nca ca ON ca.vec_id = enc.vec_id JOIN nqp qp ON qp.cell = ca.cell AND enc.vec_id <> qp.query_id")},
+        ${adcCosineCte("l")},
+        ${topKCte("lp5", "lp1", 5)},
+        ${hitCte("lhit", "lp5")}"""
 
   /** qt46's unrolled-GD CTE chain with every CTE name prefixed by `pre`
     * — prefix "" reproduces the standalone oracle; a non-empty prefix
@@ -1259,84 +1099,24 @@ object DataOpsQueries {
     * [[graft.sim.Pq.fitLloyd]] + [[graft.sim.Pq.reconstruct]]'s
     * arithmetic. Tail = qs17's brute/score/recall CTEs.
     */
-  private lazy val pqLloydOracleSql: String = {
-    val l2sub = (vec: String, ce: String, off: String) =>
-      s"""list_reduce(list_transform(range(1, 17),
-            i -> (CAST($vec[CAST($off + i AS INT)] AS DOUBLE) - CAST($ce[i] AS DOUBLE))
-               * (CAST($vec[CAST($off + i AS INT)] AS DOUBLE) - CAST($ce[i] AS DOUBLE))),
-            (x, y) -> x + y)"""
-    val perSub = (0 until 4).map { j =>
-      val o = j * 16
-      s"""scb_$j AS (SELECT code, list_slice(embedding, ${o + 1}, ${o + 16}) AS ce FROM seeds),
-        a1_$j AS (SELECT vec_id, sub, code FROM (
-          SELECT s.vec_id, list_slice(s.embedding, ${o + 1}, ${o + 16}) AS sub, sc.code,
-            ROW_NUMBER() OVER (PARTITION BY s.vec_id ORDER BY
-              ${l2sub("s.embedding", "sc.ce", o.toString)}, sc.code) AS rk
-          FROM samp s CROSS JOIN scb_$j sc) WHERE rk = 1),
-        a1d_$j AS (SELECT a.code, a.vec_id, t.i, CAST(a.sub[t.i] AS DOUBLE) AS v
-          FROM a1_$j a, range(1, 17) t(i)),
-        m1_$j AS (SELECT code, i,
-            list_reduce(list(v ORDER BY vec_id), (x, y) -> x + y) / COUNT(*) AS cv
-          FROM a1d_$j GROUP BY code, i),
-        c1d_$j AS (SELECT sc.code, t.i, COALESCE(m.cv, CAST(sc.ce[t.i] AS DOUBLE)) AS cv
-          FROM scb_$j sc CROSS JOIN range(1, 17) t(i)
-          LEFT JOIN m1_$j m ON m.code = sc.code AND m.i = t.i),
-        c1_$j AS (SELECT code, list(cv ORDER BY i) AS ce FROM c1d_$j GROUP BY code)"""
-    }.mkString(",\n        ")
-    val cbUnion = (0 until 4)
-      .map(j => s"SELECT $j AS j, code, ce FROM c1_$j")
-      .mkString(" UNION ALL ")
-    s"""WITH qv AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 4),
-        br0 AS (SELECT qv.query_id, e.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(e.embedding) + 1),
-              i -> CAST(e.embedding[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> CAST(qv.qe[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)))
-            AS cosine
-          FROM embeddings e, qv WHERE e.vec_id <> qv.query_id),
-        br AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM br0) WHERE rk <= 5),
-        seeds AS (SELECT embedding, ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS code
-          FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 8)),
-        samp AS (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 4096),
-        $perSub,
-        cb1 AS ($cbUnion),
+  private lazy val pqLloydOracleSql: String =
+    s"""WITH $qvCte,
+        ${bruteCtes("embeddings", "e", 5)},
+        ${codeSeedsCte("seeds", "embeddings", 8)},
+        ${pqLloydCtes("", "embeddings", "seeds", 4, 16, "cb1")},
         cbf AS (SELECT j, code,
             list_transform(ce, x -> CAST(CAST(x AS REAL) AS DOUBLE)) AS fe
           FROM cb1),
-        enc AS (SELECT vec_id, j, code FROM (
-          SELECT e.vec_id, cb1.j, cb1.code,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id, cb1.j ORDER BY
-              ${l2sub("e.embedding", "cb1.ce", "cb1.j * 16")}, cb1.code) AS rk
-          FROM embeddings e CROSS JOIN cb1) WHERE rk = 1),
+        ${encodeCte("enc", "embeddings", "e", "cb1", 16)},
         rec AS (SELECT enc.vec_id, flatten(list(f.fe ORDER BY enc.j)) AS re
           FROM enc JOIN cbf f ON f.j = enc.j AND f.code = enc.code
           GROUP BY enc.vec_id),
         p0 AS (SELECT qv.query_id, r.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(r.re) + 1),
-              i -> CAST(r.re[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(r.re) + 1),
-                i -> CAST(r.re[i] AS DOUBLE) * CAST(r.re[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> CAST(qv.qe[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)))
+            ${cosineSql("r.re", "qv.qe")}
             AS cosine
           FROM rec r, qv WHERE r.vec_id <> qv.query_id),
-        p5 AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM p0) WHERE rk <= 5),
-        hit AS (SELECT a.query_id, COUNT(*) AS n_hit FROM p5 a
-          JOIN br ON br.query_id = a.query_id AND br.neighbor_id = a.neighbor_id
-          GROUP BY a.query_id),
-        ex AS (SELECT query_id, COUNT(*) AS n_exact FROM br GROUP BY query_id)
-        SELECT ex.query_id, CAST(COALESCE(hit.n_hit, 0) AS INT) AS n_hit,
-          CAST(ex.n_exact AS INT) AS n_exact,
-          CAST(COALESCE(hit.n_hit, 0) AS DOUBLE) / ex.n_exact AS recall
-        FROM ex LEFT JOIN hit ON hit.query_id = ex.query_id
-        ORDER BY ex.query_id"""
-  }
+        ${topKCte("p5", "p0", 5)},
+        ${recallTail("p5")}"""
 
   /** Dictionary-quality oracle (Vocab.dictionaryQuality with topN=200,
     * keepAt=0.8) — shared by the batch arm (qt20) and its streaming
@@ -2413,19 +2193,8 @@ object DataOpsQueries {
             col("n_exact").cast("int").as("n_exact"), col("recall"))
           .orderBy(col("query_id"))
       },
-      Some("""WITH qv AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 4),
-        br0 AS (SELECT qv.query_id, e.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(e.embedding) + 1),
-              i -> CAST(e.embedding[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> CAST(qv.qe[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)))
-            AS cosine
-          FROM embeddings e, qv WHERE e.vec_id <> qv.query_id),
-        br AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM br0) WHERE rk <= 5),
+      Some(s"""WITH $qvCte,
+        ${bruteCtes("embeddings", "e", 5)},
         qz AS (SELECT vec_id, embedding,
             list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) / CAST(127.0 AS DOUBLE) AS scale
           FROM embeddings),
@@ -2434,26 +2203,11 @@ object DataOpsQueries {
               ELSE CAST(FLOOR(CAST(x AS DOUBLE) / scale + 0.5) AS INT) END) AS codes
           FROM qz),
         i0 AS (SELECT qv.query_id, z.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(z.codes) + 1),
-              i -> CAST(z.codes[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(z.codes) + 1),
-                i -> CAST(z.codes[i] AS DOUBLE) * CAST(z.codes[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> CAST(qv.qe[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)))
+            ${cosineSql("z.codes", "qv.qe")}
             AS cosine
           FROM zc z, qv WHERE z.vec_id <> qv.query_id),
-        i5 AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM i0) WHERE rk <= 5),
-        hit AS (SELECT a.query_id, COUNT(*) AS n_hit FROM i5 a
-          JOIN br ON br.query_id = a.query_id AND br.neighbor_id = a.neighbor_id
-          GROUP BY a.query_id),
-        ex AS (SELECT query_id, COUNT(*) AS n_exact FROM br GROUP BY query_id)
-        SELECT ex.query_id, CAST(COALESCE(hit.n_hit, 0) AS INT) AS n_hit,
-          CAST(ex.n_exact AS INT) AS n_exact,
-          CAST(COALESCE(hit.n_hit, 0) AS DOUBLE) / ex.n_exact AS recall
-        FROM ex LEFT JOIN hit ON hit.query_id = ex.query_id
-        ORDER BY ex.query_id""")),
+        ${topKCte("i5", "i0", 5)},
+        ${recallTail("i5")}""")),
 
     // ---- the full PRODUCTION SERVING STACK, oracled: IVF partial
     // probe (nprobe=2 of 8) over the int8-QUANTIZED corpus — the
@@ -2496,19 +2250,8 @@ object DataOpsQueries {
             col("n_exact").cast("int").as("n_exact"), col("recall"))
           .orderBy(col("query_id"))
       },
-      Some("""WITH qv AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 4),
-        br0 AS (SELECT qv.query_id, e.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(e.embedding) + 1),
-              i -> CAST(e.embedding[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> CAST(qv.qe[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)))
-            AS cosine
-          FROM embeddings e, qv WHERE e.vec_id <> qv.query_id),
-        br AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM br0) WHERE rk <= 5),
+      Some(s"""WITH $qvCte,
+        ${bruteCtes("embeddings", "e", 5)},
         qz AS (SELECT vec_id, embedding,
             list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) / CAST(127.0 AS DOUBLE) AS scale
           FROM embeddings),
@@ -2522,40 +2265,16 @@ object DataOpsQueries {
         ca AS (SELECT vec_id, codes, cell FROM (
           SELECT z.vec_id, z.codes, c.cell,
             ROW_NUMBER() OVER (PARTITION BY z.vec_id ORDER BY
-              list_reduce(list_transform(range(1, len(z.codes) + 1),
-                i -> (CAST(z.codes[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))
-                   * (CAST(z.codes[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))), (x, y) -> x + y),
+              ${l2sqLenSql("z.codes", "c.ce")},
               c.cell) AS rk
           FROM zc z CROSS JOIN cent c) WHERE rk = 1),
-        qp AS (SELECT query_id, qe, cell FROM (
-          SELECT qv.query_id, qv.qe, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY qv.query_id ORDER BY
-              list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> (CAST(qv.qe[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))
-                   * (CAST(qv.qe[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))), (x, y) -> x + y),
-              c.cell) AS rk
-          FROM qv CROSS JOIN cent c) WHERE rk <= 2),
+        ${probeCte("qp", "cent", 2)},
         i0 AS (SELECT qp.query_id, ca.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(ca.codes) + 1),
-              i -> CAST(ca.codes[i] AS DOUBLE) * CAST(qp.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(ca.codes) + 1),
-                i -> CAST(ca.codes[i] AS DOUBLE) * CAST(ca.codes[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qp.qe) + 1),
-                i -> CAST(qp.qe[i] AS DOUBLE) * CAST(qp.qe[i] AS DOUBLE)), (x, y) -> x + y)))
+            ${cosineSql("ca.codes", "qp.qe")}
             AS cosine
           FROM ca JOIN qp ON ca.cell = qp.cell AND ca.vec_id <> qp.query_id),
-        i5 AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM i0) WHERE rk <= 5),
-        hit AS (SELECT a.query_id, COUNT(*) AS n_hit FROM i5 a
-          JOIN br ON br.query_id = a.query_id AND br.neighbor_id = a.neighbor_id
-          GROUP BY a.query_id),
-        ex AS (SELECT query_id, COUNT(*) AS n_exact FROM br GROUP BY query_id)
-        SELECT ex.query_id, CAST(COALESCE(hit.n_hit, 0) AS INT) AS n_hit,
-          CAST(ex.n_exact AS INT) AS n_exact,
-          CAST(COALESCE(hit.n_hit, 0) AS DOUBLE) / ex.n_exact AS recall
-        FROM ex LEFT JOIN hit ON hit.query_id = ex.query_id
-        ORDER BY ex.query_id""")),
+        ${topKCte("i5", "i0", 5)},
+        ${recallTail("i5")}""")),
 
     // ---- ... and the FIX, also oracled: the SAME int8-served stack
     // with cell assignment in FLOAT space — the production IVF layout,
@@ -2587,19 +2306,8 @@ object DataOpsQueries {
             col("n_exact").cast("int").as("n_exact"), col("recall"))
           .orderBy(col("query_id"))
       },
-      Some("""WITH qv AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 4),
-        br0 AS (SELECT qv.query_id, e.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(e.embedding) + 1),
-              i -> CAST(e.embedding[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> CAST(qv.qe[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)))
-            AS cosine
-          FROM embeddings e, qv WHERE e.vec_id <> qv.query_id),
-        br AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM br0) WHERE rk <= 5),
+      Some(s"""WITH $qvCte,
+        ${bruteCtes("embeddings", "e", 5)},
         qz AS (SELECT vec_id, embedding,
             list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) / CAST(127.0 AS DOUBLE) AS scale
           FROM embeddings),
@@ -2607,47 +2315,16 @@ object DataOpsQueries {
             list_transform(embedding, x -> CASE WHEN scale = 0.0 THEN 0
               ELSE CAST(FLOOR(CAST(x AS DOUBLE) / scale + 0.5) AS INT) END) AS codes
           FROM qz),
-        cent AS (SELECT embedding AS ce,
-            ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell
-          FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 8)),
-        ca AS (SELECT vec_id, cell FROM (
-          SELECT e.vec_id, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-              list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> (CAST(e.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))
-                   * (CAST(e.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))), (x, y) -> x + y),
-              c.cell) AS rk
-          FROM embeddings e CROSS JOIN cent c) WHERE rk = 1),
-        qp AS (SELECT query_id, qe, cell FROM (
-          SELECT qv.query_id, qv.qe, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY qv.query_id ORDER BY
-              list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> (CAST(qv.qe[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))
-                   * (CAST(qv.qe[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))), (x, y) -> x + y),
-              c.cell) AS rk
-          FROM qv CROSS JOIN cent c) WHERE rk <= 2),
+        ${cellSeedsCte("cent", "embeddings", 8)},
+        ${cellCte("ca", "embeddings", "e", "cent")},
+        ${probeCte("qp", "cent", 2)},
         i0 AS (SELECT qp.query_id, z.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(z.codes) + 1),
-              i -> CAST(z.codes[i] AS DOUBLE) * CAST(qp.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(z.codes) + 1),
-                i -> CAST(z.codes[i] AS DOUBLE) * CAST(z.codes[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qp.qe) + 1),
-                i -> CAST(qp.qe[i] AS DOUBLE) * CAST(qp.qe[i] AS DOUBLE)), (x, y) -> x + y)))
+            ${cosineSql("z.codes", "qp.qe")}
             AS cosine
           FROM ca JOIN zc z ON z.vec_id = ca.vec_id
           JOIN qp ON ca.cell = qp.cell AND ca.vec_id <> qp.query_id),
-        i5 AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM i0) WHERE rk <= 5),
-        hit AS (SELECT a.query_id, COUNT(*) AS n_hit FROM i5 a
-          JOIN br ON br.query_id = a.query_id AND br.neighbor_id = a.neighbor_id
-          GROUP BY a.query_id),
-        ex AS (SELECT query_id, COUNT(*) AS n_exact FROM br GROUP BY query_id)
-        SELECT ex.query_id, CAST(COALESCE(hit.n_hit, 0) AS INT) AS n_hit,
-          CAST(ex.n_exact AS INT) AS n_exact,
-          CAST(COALESCE(hit.n_hit, 0) AS DOUBLE) / ex.n_exact AS recall
-        FROM ex LEFT JOIN hit ON hit.query_id = ex.query_id
-        ORDER BY ex.query_id""")),
+        ${topKCte("i5", "i0", 5)},
+        ${recallTail("i5")}""")),
 
     // ---- PRODUCT QUANTIZATION serving recall (sim/Pq): the corpus
     // compressed to m=4 code ids from k=8 per-subspace codebooks (64
@@ -2681,57 +2358,20 @@ object DataOpsQueries {
             col("n_exact").cast("int").as("n_exact"), col("recall"))
           .orderBy(col("query_id"))
       },
-      Some("""WITH qv AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 4),
-        br0 AS (SELECT qv.query_id, e.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(e.embedding) + 1),
-              i -> CAST(e.embedding[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> CAST(qv.qe[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)))
-            AS cosine
-          FROM embeddings e, qv WHERE e.vec_id <> qv.query_id),
-        br AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM br0) WHERE rk <= 5),
-        seeds AS (SELECT embedding, ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS code
-          FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 8)),
-        cb AS (SELECT t.j, s.code,
-            list_slice(s.embedding, t.j * 16 + 1, t.j * 16 + 16) AS ce
-          FROM seeds s CROSS JOIN range(0, 4) t(j)),
-        enc AS (SELECT vec_id, j, code FROM (
-          SELECT e.vec_id, cb.j, cb.code,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id, cb.j ORDER BY
-              list_reduce(list_transform(range(1, 17),
-                i -> (CAST(e.embedding[CAST(cb.j * 16 + i AS INT)] AS DOUBLE) - CAST(cb.ce[i] AS DOUBLE))
-                   * (CAST(e.embedding[CAST(cb.j * 16 + i AS INT)] AS DOUBLE) - CAST(cb.ce[i] AS DOUBLE))),
-                (x, y) -> x + y),
-              cb.code) AS rk
-          FROM embeddings e CROSS JOIN cb) WHERE rk = 1),
+      Some(s"""WITH $qvCte,
+        ${bruteCtes("embeddings", "e", 5)},
+        ${codeSeedsCte("seeds", "embeddings", 8)},
+        ${codebookCte("cb", "seeds", 4, 16)},
+        ${encodeCte("enc", "embeddings", "e", "cb", 16)},
         rec AS (SELECT enc.vec_id, flatten(list(cb.ce ORDER BY enc.j)) AS re
           FROM enc JOIN cb ON cb.j = enc.j AND cb.code = enc.code
           GROUP BY enc.vec_id),
         p0 AS (SELECT qv.query_id, r.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(r.re) + 1),
-              i -> CAST(r.re[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(r.re) + 1),
-                i -> CAST(r.re[i] AS DOUBLE) * CAST(r.re[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> CAST(qv.qe[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)))
+            ${cosineSql("r.re", "qv.qe")}
             AS cosine
           FROM rec r, qv WHERE r.vec_id <> qv.query_id),
-        p5 AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM p0) WHERE rk <= 5),
-        hit AS (SELECT a.query_id, COUNT(*) AS n_hit FROM p5 a
-          JOIN br ON br.query_id = a.query_id AND br.neighbor_id = a.neighbor_id
-          GROUP BY a.query_id),
-        ex AS (SELECT query_id, COUNT(*) AS n_exact FROM br GROUP BY query_id)
-        SELECT ex.query_id, CAST(COALESCE(hit.n_hit, 0) AS INT) AS n_hit,
-          CAST(ex.n_exact AS INT) AS n_exact,
-          CAST(COALESCE(hit.n_hit, 0) AS DOUBLE) / ex.n_exact AS recall
-        FROM ex LEFT JOIN hit ON hit.query_id = ex.query_id
-        ORDER BY ex.query_id""")),
+        ${topKCte("p5", "p0", 5)},
+        ${recallTail("p5")}""")),
 
     // ---- the COMPOSED IVF-PQ stack (the FAISS-style production
     // layout): coarse cells assigned in FLOAT space — qs13's measured
@@ -2764,77 +2404,24 @@ object DataOpsQueries {
             col("n_exact").cast("int").as("n_exact"), col("recall"))
           .orderBy(col("query_id"))
       },
-      Some("""WITH qv AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 4),
-        br0 AS (SELECT qv.query_id, e.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(e.embedding) + 1),
-              i -> CAST(e.embedding[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> CAST(qv.qe[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)))
-            AS cosine
-          FROM embeddings e, qv WHERE e.vec_id <> qv.query_id),
-        br AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM br0) WHERE rk <= 5),
-        seeds AS (SELECT embedding, ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS code
-          FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 8)),
-        cb AS (SELECT t.j, s.code,
-            list_slice(s.embedding, t.j * 16 + 1, t.j * 16 + 16) AS ce
-          FROM seeds s CROSS JOIN range(0, 4) t(j)),
-        enc AS (SELECT vec_id, j, code FROM (
-          SELECT e.vec_id, cb.j, cb.code,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id, cb.j ORDER BY
-              list_reduce(list_transform(range(1, 17),
-                i -> (CAST(e.embedding[CAST(cb.j * 16 + i AS INT)] AS DOUBLE) - CAST(cb.ce[i] AS DOUBLE))
-                   * (CAST(e.embedding[CAST(cb.j * 16 + i AS INT)] AS DOUBLE) - CAST(cb.ce[i] AS DOUBLE))),
-                (x, y) -> x + y),
-              cb.code) AS rk
-          FROM embeddings e CROSS JOIN cb) WHERE rk = 1),
+      Some(s"""WITH $qvCte,
+        ${bruteCtes("embeddings", "e", 5)},
+        ${codeSeedsCte("seeds", "embeddings", 8)},
+        ${codebookCte("cb", "seeds", 4, 16)},
+        ${encodeCte("enc", "embeddings", "e", "cb", 16)},
         rec AS (SELECT enc.vec_id, flatten(list(cb.ce ORDER BY enc.j)) AS re
           FROM enc JOIN cb ON cb.j = enc.j AND cb.code = enc.code
           GROUP BY enc.vec_id),
-        cent AS (SELECT embedding AS ce,
-            ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell
-          FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 8)),
-        ca AS (SELECT vec_id, cell FROM (
-          SELECT e.vec_id, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-              list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> (CAST(e.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))
-                   * (CAST(e.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))), (x, y) -> x + y),
-              c.cell) AS rk
-          FROM embeddings e CROSS JOIN cent c) WHERE rk = 1),
-        qp AS (SELECT query_id, qe, cell FROM (
-          SELECT qv.query_id, qv.qe, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY qv.query_id ORDER BY
-              list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> (CAST(qv.qe[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))
-                   * (CAST(qv.qe[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))), (x, y) -> x + y),
-              c.cell) AS rk
-          FROM qv CROSS JOIN cent c) WHERE rk <= 2),
+        ${cellSeedsCte("cent", "embeddings", 8)},
+        ${cellCte("ca", "embeddings", "e", "cent")},
+        ${probeCte("qp", "cent", 2)},
         i0 AS (SELECT qp.query_id, r.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(r.re) + 1),
-              i -> CAST(r.re[i] AS DOUBLE) * CAST(qp.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(r.re) + 1),
-                i -> CAST(r.re[i] AS DOUBLE) * CAST(r.re[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qp.qe) + 1),
-                i -> CAST(qp.qe[i] AS DOUBLE) * CAST(qp.qe[i] AS DOUBLE)), (x, y) -> x + y)))
+            ${cosineSql("r.re", "qp.qe")}
             AS cosine
           FROM ca JOIN rec r ON r.vec_id = ca.vec_id
           JOIN qp ON ca.cell = qp.cell AND ca.vec_id <> qp.query_id),
-        i5 AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM i0) WHERE rk <= 5),
-        hit AS (SELECT a.query_id, COUNT(*) AS n_hit FROM i5 a
-          JOIN br ON br.query_id = a.query_id AND br.neighbor_id = a.neighbor_id
-          GROUP BY a.query_id),
-        ex AS (SELECT query_id, COUNT(*) AS n_exact FROM br GROUP BY query_id)
-        SELECT ex.query_id, CAST(COALESCE(hit.n_hit, 0) AS INT) AS n_hit,
-          CAST(ex.n_exact AS INT) AS n_exact,
-          CAST(COALESCE(hit.n_hit, 0) AS DOUBLE) / ex.n_exact AS recall
-        FROM ex LEFT JOIN hit ON hit.query_id = ex.query_id
-        ORDER BY ex.query_id""")),
+        ${topKCte("i5", "i0", 5)},
+        ${recallTail("i5")}""")),
 
     // ---- Lloyd-REFINED PQ (Pq.fitLloyd, iters=1): does one k-means
     // step per subspace recover the recall qs17's seed codebooks give
@@ -2890,57 +2477,20 @@ object DataOpsQueries {
             col("n_exact").cast("int").as("n_exact"), col("recall"))
           .orderBy(col("query_id"))
       },
-      Some("""WITH qv AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 4),
-        br0 AS (SELECT qv.query_id, e.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(e.embedding) + 1),
-              i -> CAST(e.embedding[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> CAST(qv.qe[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)))
-            AS cosine
-          FROM embeddings e, qv WHERE e.vec_id <> qv.query_id),
-        br AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM br0) WHERE rk <= 5),
-        seeds AS (SELECT embedding, ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS code
-          FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 64)),
-        cb AS (SELECT t.j, s.code,
-            list_slice(s.embedding, t.j * 16 + 1, t.j * 16 + 16) AS ce
-          FROM seeds s CROSS JOIN range(0, 4) t(j)),
-        enc AS (SELECT vec_id, j, code FROM (
-          SELECT e.vec_id, cb.j, cb.code,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id, cb.j ORDER BY
-              list_reduce(list_transform(range(1, 17),
-                i -> (CAST(e.embedding[CAST(cb.j * 16 + i AS INT)] AS DOUBLE) - CAST(cb.ce[i] AS DOUBLE))
-                   * (CAST(e.embedding[CAST(cb.j * 16 + i AS INT)] AS DOUBLE) - CAST(cb.ce[i] AS DOUBLE))),
-                (x, y) -> x + y),
-              cb.code) AS rk
-          FROM embeddings e CROSS JOIN cb) WHERE rk = 1),
+      Some(s"""WITH $qvCte,
+        ${bruteCtes("embeddings", "e", 5)},
+        ${codeSeedsCte("seeds", "embeddings", 64)},
+        ${codebookCte("cb", "seeds", 4, 16)},
+        ${encodeCte("enc", "embeddings", "e", "cb", 16)},
         rec AS (SELECT enc.vec_id, flatten(list(cb.ce ORDER BY enc.j)) AS re
           FROM enc JOIN cb ON cb.j = enc.j AND cb.code = enc.code
           GROUP BY enc.vec_id),
         p0 AS (SELECT qv.query_id, r.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(r.re) + 1),
-              i -> CAST(r.re[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(r.re) + 1),
-                i -> CAST(r.re[i] AS DOUBLE) * CAST(r.re[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> CAST(qv.qe[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)))
+            ${cosineSql("r.re", "qv.qe")}
             AS cosine
           FROM rec r, qv WHERE r.vec_id <> qv.query_id),
-        p5 AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM p0) WHERE rk <= 5),
-        hit AS (SELECT a.query_id, COUNT(*) AS n_hit FROM p5 a
-          JOIN br ON br.query_id = a.query_id AND br.neighbor_id = a.neighbor_id
-          GROUP BY a.query_id),
-        ex AS (SELECT query_id, COUNT(*) AS n_exact FROM br GROUP BY query_id)
-        SELECT ex.query_id, CAST(COALESCE(hit.n_hit, 0) AS INT) AS n_hit,
-          CAST(ex.n_exact AS INT) AS n_exact,
-          CAST(COALESCE(hit.n_hit, 0) AS DOUBLE) / ex.n_exact AS recall
-        FROM ex LEFT JOIN hit ON hit.query_id = ex.query_id
-        ORDER BY ex.query_id""")),
+        ${topKCte("p5", "p0", 5)},
+        ${recallTail("p5")}""")),
 
     // ---- PQ at serving-grade bits (m=16 subspaces of 4 dims, k=256
     // codes = 128 bits / 16 bytes per vector, 16x compression):
@@ -2968,57 +2518,20 @@ object DataOpsQueries {
             col("n_exact").cast("int").as("n_exact"), col("recall"))
           .orderBy(col("query_id"))
       },
-      Some("""WITH qv AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 4),
-        br0 AS (SELECT qv.query_id, e.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(e.embedding) + 1),
-              i -> CAST(e.embedding[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> CAST(qv.qe[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)))
-            AS cosine
-          FROM embeddings e, qv WHERE e.vec_id <> qv.query_id),
-        br AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM br0) WHERE rk <= 5),
-        seeds AS (SELECT embedding, ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS code
-          FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 256)),
-        cb AS (SELECT t.j, s.code,
-            list_slice(s.embedding, t.j * 4 + 1, t.j * 4 + 4) AS ce
-          FROM seeds s CROSS JOIN range(0, 16) t(j)),
-        enc AS (SELECT vec_id, j, code FROM (
-          SELECT e.vec_id, cb.j, cb.code,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id, cb.j ORDER BY
-              list_reduce(list_transform(range(1, 5),
-                i -> (CAST(e.embedding[CAST(cb.j * 4 + i AS INT)] AS DOUBLE) - CAST(cb.ce[i] AS DOUBLE))
-                   * (CAST(e.embedding[CAST(cb.j * 4 + i AS INT)] AS DOUBLE) - CAST(cb.ce[i] AS DOUBLE))),
-                (x, y) -> x + y),
-              cb.code) AS rk
-          FROM embeddings e CROSS JOIN cb) WHERE rk = 1),
+      Some(s"""WITH $qvCte,
+        ${bruteCtes("embeddings", "e", 5)},
+        ${codeSeedsCte("seeds", "embeddings", 256)},
+        ${codebookCte("cb", "seeds", 16, 4)},
+        ${encodeCte("enc", "embeddings", "e", "cb", 4)},
         rec AS (SELECT enc.vec_id, flatten(list(cb.ce ORDER BY enc.j)) AS re
           FROM enc JOIN cb ON cb.j = enc.j AND cb.code = enc.code
           GROUP BY enc.vec_id),
         p0 AS (SELECT qv.query_id, r.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(r.re) + 1),
-              i -> CAST(r.re[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(r.re) + 1),
-                i -> CAST(r.re[i] AS DOUBLE) * CAST(r.re[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> CAST(qv.qe[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)))
+            ${cosineSql("r.re", "qv.qe")}
             AS cosine
           FROM rec r, qv WHERE r.vec_id <> qv.query_id),
-        p5 AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM p0) WHERE rk <= 5),
-        hit AS (SELECT a.query_id, COUNT(*) AS n_hit FROM p5 a
-          JOIN br ON br.query_id = a.query_id AND br.neighbor_id = a.neighbor_id
-          GROUP BY a.query_id),
-        ex AS (SELECT query_id, COUNT(*) AS n_exact FROM br GROUP BY query_id)
-        SELECT ex.query_id, CAST(COALESCE(hit.n_hit, 0) AS INT) AS n_hit,
-          CAST(ex.n_exact AS INT) AS n_exact,
-          CAST(COALESCE(hit.n_hit, 0) AS DOUBLE) / ex.n_exact AS recall
-        FROM ex LEFT JOIN hit ON hit.query_id = ex.query_id
-        ORDER BY ex.query_id""")),
+        ${topKCte("p5", "p0", 5)},
+        ${recallTail("p5")}""")),
 
     // ---- the SERVING-GRADE composed IVF-PQ stack — qs18's proven
     // composition re-pointed at qs21's serving-grade code: float-space
@@ -3055,77 +2568,24 @@ object DataOpsQueries {
             col("n_exact").cast("int").as("n_exact"), col("recall"))
           .orderBy(col("query_id"))
       },
-      Some("""WITH qv AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 4),
-        br0 AS (SELECT qv.query_id, e.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(e.embedding) + 1),
-              i -> CAST(e.embedding[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> CAST(qv.qe[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)))
-            AS cosine
-          FROM embeddings e, qv WHERE e.vec_id <> qv.query_id),
-        br AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM br0) WHERE rk <= 5),
-        seeds AS (SELECT embedding, ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS code
-          FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 256)),
-        cb AS (SELECT t.j, s.code,
-            list_slice(s.embedding, t.j * 4 + 1, t.j * 4 + 4) AS ce
-          FROM seeds s CROSS JOIN range(0, 16) t(j)),
-        enc AS (SELECT vec_id, j, code FROM (
-          SELECT e.vec_id, cb.j, cb.code,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id, cb.j ORDER BY
-              list_reduce(list_transform(range(1, 5),
-                i -> (CAST(e.embedding[CAST(cb.j * 4 + i AS INT)] AS DOUBLE) - CAST(cb.ce[i] AS DOUBLE))
-                   * (CAST(e.embedding[CAST(cb.j * 4 + i AS INT)] AS DOUBLE) - CAST(cb.ce[i] AS DOUBLE))),
-                (x, y) -> x + y),
-              cb.code) AS rk
-          FROM embeddings e CROSS JOIN cb) WHERE rk = 1),
+      Some(s"""WITH $qvCte,
+        ${bruteCtes("embeddings", "e", 5)},
+        ${codeSeedsCte("seeds", "embeddings", 256)},
+        ${codebookCte("cb", "seeds", 16, 4)},
+        ${encodeCte("enc", "embeddings", "e", "cb", 4)},
         rec AS (SELECT enc.vec_id, flatten(list(cb.ce ORDER BY enc.j)) AS re
           FROM enc JOIN cb ON cb.j = enc.j AND cb.code = enc.code
           GROUP BY enc.vec_id),
-        cent AS (SELECT embedding AS ce,
-            ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell
-          FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 8)),
-        ca AS (SELECT vec_id, cell FROM (
-          SELECT e.vec_id, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-              list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> (CAST(e.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))
-                   * (CAST(e.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))), (x, y) -> x + y),
-              c.cell) AS rk
-          FROM embeddings e CROSS JOIN cent c) WHERE rk = 1),
-        qp AS (SELECT query_id, qe, cell FROM (
-          SELECT qv.query_id, qv.qe, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY qv.query_id ORDER BY
-              list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> (CAST(qv.qe[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))
-                   * (CAST(qv.qe[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))), (x, y) -> x + y),
-              c.cell) AS rk
-          FROM qv CROSS JOIN cent c) WHERE rk <= 4),
+        ${cellSeedsCte("cent", "embeddings", 8)},
+        ${cellCte("ca", "embeddings", "e", "cent")},
+        ${probeCte("qp", "cent", 4)},
         i0 AS (SELECT qp.query_id, r.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(r.re) + 1),
-              i -> CAST(r.re[i] AS DOUBLE) * CAST(qp.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(r.re) + 1),
-                i -> CAST(r.re[i] AS DOUBLE) * CAST(r.re[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qp.qe) + 1),
-                i -> CAST(qp.qe[i] AS DOUBLE) * CAST(qp.qe[i] AS DOUBLE)), (x, y) -> x + y)))
+            ${cosineSql("r.re", "qp.qe")}
             AS cosine
           FROM ca JOIN rec r ON r.vec_id = ca.vec_id
           JOIN qp ON ca.cell = qp.cell AND ca.vec_id <> qp.query_id),
-        i5 AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM i0) WHERE rk <= 5),
-        hit AS (SELECT a.query_id, COUNT(*) AS n_hit FROM i5 a
-          JOIN br ON br.query_id = a.query_id AND br.neighbor_id = a.neighbor_id
-          GROUP BY a.query_id),
-        ex AS (SELECT query_id, COUNT(*) AS n_exact FROM br GROUP BY query_id)
-        SELECT ex.query_id, CAST(COALESCE(hit.n_hit, 0) AS INT) AS n_hit,
-          CAST(ex.n_exact AS INT) AS n_exact,
-          CAST(COALESCE(hit.n_hit, 0) AS DOUBLE) / ex.n_exact AS recall
-        FROM ex LEFT JOIN hit ON hit.query_id = ex.query_id
-        ORDER BY ex.query_id""")),
+        ${topKCte("i5", "i0", 5)},
+        ${recallTail("i5")}""")),
 
     // ---- ADC lookup-table scoring (Pq.withAdcTables/adcCosine) at the
     // 128-bit serving point: the SAME ranking problem as qs21 but
@@ -3165,65 +2625,16 @@ object DataOpsQueries {
             col("n_exact").cast("int").as("n_exact"), col("recall"))
           .orderBy(col("query_id"))
       },
-      Some("""WITH qv AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 4),
-        br0 AS (SELECT qv.query_id, e.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(e.embedding) + 1),
-              i -> CAST(e.embedding[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> CAST(qv.qe[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)))
-            AS cosine
-          FROM embeddings e, qv WHERE e.vec_id <> qv.query_id),
-        br AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM br0) WHERE rk <= 5),
-        seeds AS (SELECT embedding, ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS code
-          FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 256)),
-        cb AS (SELECT t.j, s.code,
-            list_slice(s.embedding, t.j * 4 + 1, t.j * 4 + 4) AS ce
-          FROM seeds s CROSS JOIN range(0, 16) t(j)),
-        enc AS (SELECT vec_id, j, code FROM (
-          SELECT e.vec_id, cb.j, cb.code,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id, cb.j ORDER BY
-              list_reduce(list_transform(range(1, 5),
-                i -> (CAST(e.embedding[CAST(cb.j * 4 + i AS INT)] AS DOUBLE) - CAST(cb.ce[i] AS DOUBLE))
-                   * (CAST(e.embedding[CAST(cb.j * 4 + i AS INT)] AS DOUBLE) - CAST(cb.ce[i] AS DOUBLE))),
-                (x, y) -> x + y),
-              cb.code) AS rk
-          FROM embeddings e CROSS JOIN cb) WHERE rk = 1),
-        qn AS (SELECT query_id,
-            list_reduce(list_transform(range(1, len(qe) + 1),
-              i -> CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE)), (x, y) -> x + y) AS qnsq
-          FROM qv),
-        pj AS (SELECT enc.vec_id, qv.query_id, enc.j,
-            list_reduce(list_transform(range(1, 5),
-              i -> CAST(qv.qe[CAST(enc.j * 4 + i AS INT)] AS DOUBLE) * CAST(cb.ce[i] AS DOUBLE)),
-              (x, y) -> x + y) AS dotj,
-            list_reduce(list_transform(range(1, 5),
-              i -> CAST(cb.ce[i] AS DOUBLE) * CAST(cb.ce[i] AS DOUBLE)),
-              (x, y) -> x + y) AS nrmj
-          FROM enc JOIN cb ON cb.j = enc.j AND cb.code = enc.code
-          CROSS JOIN qv WHERE enc.vec_id <> qv.query_id),
-        p0 AS (SELECT vec_id AS neighbor_id, query_id,
-            list_reduce(list(dotj ORDER BY j), (x, y) -> x + y) AS num,
-            list_reduce(list(nrmj ORDER BY j), (x, y) -> x + y) AS rn
-          FROM pj GROUP BY vec_id, query_id),
-        p1 AS (SELECT p0.query_id, p0.neighbor_id,
-            num / (sqrt(rn) * sqrt(qn.qnsq)) AS cosine
-          FROM p0 JOIN qn ON qn.query_id = p0.query_id),
-        p5 AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM p1) WHERE rk <= 5),
-        hit AS (SELECT a.query_id, COUNT(*) AS n_hit FROM p5 a
-          JOIN br ON br.query_id = a.query_id AND br.neighbor_id = a.neighbor_id
-          GROUP BY a.query_id),
-        ex AS (SELECT query_id, COUNT(*) AS n_exact FROM br GROUP BY query_id)
-        SELECT ex.query_id, CAST(COALESCE(hit.n_hit, 0) AS INT) AS n_hit,
-          CAST(ex.n_exact AS INT) AS n_exact,
-          CAST(COALESCE(hit.n_hit, 0) AS DOUBLE) / ex.n_exact AS recall
-        FROM ex LEFT JOIN hit ON hit.query_id = ex.query_id
-        ORDER BY ex.query_id""")),
+      Some(s"""WITH $qvCte,
+        ${bruteCtes("embeddings", "e", 5)},
+        ${codeSeedsCte("seeds", "embeddings", 256)},
+        ${codebookCte("cb", "seeds", 16, 4)},
+        ${encodeCte("enc", "embeddings", "e", "cb", 4)},
+        $qnCte,
+        ${adcCtes("", "qv", "CROSS JOIN qv WHERE enc.vec_id <> qv.query_id")},
+        ${adcCosineCte("")},
+        ${topKCte("p5", "p1", 5)},
+        ${recallTail("p5")}""")),
 
     // ---- the END-STATE serving plan (Ivf.topKAdc): qs22's composition
     // with qs23's scoring — float-space cells, nprobe=4 partial probe,
@@ -3253,85 +2664,19 @@ object DataOpsQueries {
             col("n_exact").cast("int").as("n_exact"), col("recall"))
           .orderBy(col("query_id"))
       },
-      Some("""WITH qv AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 4),
-        br0 AS (SELECT qv.query_id, e.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(e.embedding) + 1),
-              i -> CAST(e.embedding[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> CAST(qv.qe[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)))
-            AS cosine
-          FROM embeddings e, qv WHERE e.vec_id <> qv.query_id),
-        br AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM br0) WHERE rk <= 5),
-        seeds AS (SELECT embedding, ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS code
-          FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 256)),
-        cb AS (SELECT t.j, s.code,
-            list_slice(s.embedding, t.j * 4 + 1, t.j * 4 + 4) AS ce
-          FROM seeds s CROSS JOIN range(0, 16) t(j)),
-        enc AS (SELECT vec_id, j, code FROM (
-          SELECT e.vec_id, cb.j, cb.code,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id, cb.j ORDER BY
-              list_reduce(list_transform(range(1, 5),
-                i -> (CAST(e.embedding[CAST(cb.j * 4 + i AS INT)] AS DOUBLE) - CAST(cb.ce[i] AS DOUBLE))
-                   * (CAST(e.embedding[CAST(cb.j * 4 + i AS INT)] AS DOUBLE) - CAST(cb.ce[i] AS DOUBLE))),
-                (x, y) -> x + y),
-              cb.code) AS rk
-          FROM embeddings e CROSS JOIN cb) WHERE rk = 1),
-        cent AS (SELECT embedding AS ce,
-            ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell
-          FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 8)),
-        ca AS (SELECT vec_id, cell FROM (
-          SELECT e.vec_id, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-              list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> (CAST(e.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))
-                   * (CAST(e.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))), (x, y) -> x + y),
-              c.cell) AS rk
-          FROM embeddings e CROSS JOIN cent c) WHERE rk = 1),
-        qp AS (SELECT query_id, qe, cell FROM (
-          SELECT qv.query_id, qv.qe, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY qv.query_id ORDER BY
-              list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> (CAST(qv.qe[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))
-                   * (CAST(qv.qe[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))), (x, y) -> x + y),
-              c.cell) AS rk
-          FROM qv CROSS JOIN cent c) WHERE rk <= 4),
-        qn AS (SELECT query_id,
-            list_reduce(list_transform(range(1, len(qe) + 1),
-              i -> CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE)), (x, y) -> x + y) AS qnsq
-          FROM qv),
-        pj AS (SELECT enc.vec_id, qp.query_id, enc.j,
-            list_reduce(list_transform(range(1, 5),
-              i -> CAST(qp.qe[CAST(enc.j * 4 + i AS INT)] AS DOUBLE) * CAST(cb.ce[i] AS DOUBLE)),
-              (x, y) -> x + y) AS dotj,
-            list_reduce(list_transform(range(1, 5),
-              i -> CAST(cb.ce[i] AS DOUBLE) * CAST(cb.ce[i] AS DOUBLE)),
-              (x, y) -> x + y) AS nrmj
-          FROM enc JOIN cb ON cb.j = enc.j AND cb.code = enc.code
-          JOIN ca ON ca.vec_id = enc.vec_id
-          JOIN qp ON qp.cell = ca.cell AND enc.vec_id <> qp.query_id),
-        p0 AS (SELECT vec_id AS neighbor_id, query_id,
-            list_reduce(list(dotj ORDER BY j), (x, y) -> x + y) AS num,
-            list_reduce(list(nrmj ORDER BY j), (x, y) -> x + y) AS rn
-          FROM pj GROUP BY vec_id, query_id),
-        p1 AS (SELECT p0.query_id, p0.neighbor_id,
-            num / (sqrt(rn) * sqrt(qn.qnsq)) AS cosine
-          FROM p0 JOIN qn ON qn.query_id = p0.query_id),
-        p5 AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM p1) WHERE rk <= 5),
-        hit AS (SELECT a.query_id, COUNT(*) AS n_hit FROM p5 a
-          JOIN br ON br.query_id = a.query_id AND br.neighbor_id = a.neighbor_id
-          GROUP BY a.query_id),
-        ex AS (SELECT query_id, COUNT(*) AS n_exact FROM br GROUP BY query_id)
-        SELECT ex.query_id, CAST(COALESCE(hit.n_hit, 0) AS INT) AS n_hit,
-          CAST(ex.n_exact AS INT) AS n_exact,
-          CAST(COALESCE(hit.n_hit, 0) AS DOUBLE) / ex.n_exact AS recall
-        FROM ex LEFT JOIN hit ON hit.query_id = ex.query_id
-        ORDER BY ex.query_id""")),
+      Some(s"""WITH $qvCte,
+        ${bruteCtes("embeddings", "e", 5)},
+        ${codeSeedsCte("seeds", "embeddings", 256)},
+        ${codebookCte("cb", "seeds", 16, 4)},
+        ${encodeCte("enc", "embeddings", "e", "cb", 4)},
+        ${cellSeedsCte("cent", "embeddings", 8)},
+        ${cellCte("ca", "embeddings", "e", "cent")},
+        ${probeCte("qp", "cent", 4)},
+        $qnCte,
+        ${adcCtes("", "qp", "JOIN ca ON ca.vec_id = enc.vec_id JOIN qp ON qp.cell = ca.cell AND enc.vec_id <> qp.query_id")},
+        ${adcCosineCte("")},
+        ${topKCte("p5", "p1", 5)},
+        ${recallTail("p5")}""")),
 
     // ---- BINARY center-thresholded codes + Hamming ranking (qs26):
     // the cheapest tier of the compression curve — 64 bits/vector (vs
@@ -3392,45 +2737,16 @@ object DataOpsQueries {
               col("n_exact")).as("recall50"))
           .orderBy(col("query_id"))
       },
-      Some("""WITH qv AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 4),
-        br0 AS (SELECT qv.query_id, e.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(e.embedding) + 1),
-              i -> CAST(e.embedding[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> CAST(qv.qe[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)))
-            AS cosine
-          FROM embeddings e, qv WHERE e.vec_id <> qv.query_id),
-        br AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM br0) WHERE rk <= 5),
-        smp AS (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 256),
-        thr AS (SELECT r.i,
-            list_reduce(list(CAST(s.embedding[r.i] AS DOUBLE) ORDER BY s.vec_id),
-              (x, y) -> x + y) / CAST(COUNT(*) AS DOUBLE) AS t
-          FROM smp s CROSS JOIN range(1, 65) r(i) GROUP BY r.i),
-        cbits AS (SELECT e.vec_id, CAST(SUM(
-            CASE WHEN CAST(e.embedding[thr.i] AS DOUBLE) > thr.t
-              THEN CASE WHEN thr.i = 64 THEN -9223372036854775807::BIGINT - 1::BIGINT
-                ELSE 1::BIGINT << CAST(thr.i - 1 AS INT) END
-              ELSE 0::BIGINT END) AS BIGINT) AS code
-          FROM embeddings e CROSS JOIN thr GROUP BY e.vec_id),
-        qbits AS (SELECT qv.query_id, CAST(SUM(
-            CASE WHEN CAST(qv.qe[thr.i] AS DOUBLE) > thr.t
-              THEN CASE WHEN thr.i = 64 THEN -9223372036854775807::BIGINT - 1::BIGINT
-                ELSE 1::BIGINT << CAST(thr.i - 1 AS INT) END
-              ELSE 0::BIGINT END) AS BIGINT) AS qcode
-          FROM qv CROSS JOIN thr GROUP BY qv.query_id),
+      Some(s"""WITH $qvCte,
+        ${bruteCtes("embeddings", "e", 5)},
+        $signBitsCtes,
         h0 AS (SELECT qb.query_id, cb2.vec_id AS neighbor_id,
             ROW_NUMBER() OVER (PARTITION BY qb.query_id
               ORDER BY bit_count(xor(cb2.code, qb.qcode)), cb2.vec_id) AS rk
           FROM cbits cb2, qbits qb WHERE cb2.vec_id <> qb.query_id),
         h5 AS (SELECT query_id, neighbor_id FROM h0 WHERE rk <= 5),
         h50 AS (SELECT query_id, neighbor_id FROM h0 WHERE rk <= 50),
-        hit AS (SELECT a.query_id, COUNT(*) AS n_hit FROM h5 a
-          JOIN br ON br.query_id = a.query_id AND br.neighbor_id = a.neighbor_id
-          GROUP BY a.query_id),
+        ${hitCte("hit", "h5")},
         hit50 AS (SELECT a.query_id, COUNT(*) AS n_in50 FROM h50 a
           JOIN br ON br.query_id = a.query_id AND br.neighbor_id = a.neighbor_id
           GROUP BY a.query_id),
@@ -3487,30 +2803,10 @@ object DataOpsQueries {
             col("n_exact").cast("int").as("n_exact"), col("recall"))
           .orderBy(col("query_id"))
       },
-      Some("""WITH qv AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 4),
-        br0 AS (SELECT qv.query_id, e.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(e.embedding) + 1),
-              i -> CAST(e.embedding[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> CAST(qv.qe[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)))
-            AS cosine
-          FROM embeddings e, qv WHERE e.vec_id <> qv.query_id),
-        br AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM br0) WHERE rk <= 5),
-        cent AS (SELECT embedding AS ce,
-            ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell
-          FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 8)),
-        ca AS (SELECT vec_id, cell FROM (
-          SELECT e.vec_id, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-              list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> (CAST(e.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))
-                   * (CAST(e.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))), (x, y) -> x + y),
-              c.cell) AS rk
-          FROM embeddings e CROSS JOIN cent c) WHERE rk = 1),
+      Some(s"""WITH $qvCte,
+        ${bruteCtes("embeddings", "e", 5)},
+        ${cellSeedsCte("cent", "embeddings", 8)},
+        ${cellCte("ca", "embeddings", "e", "cent")},
         rr AS (SELECT e.vec_id, ca.cell,
             list_transform(range(1, len(e.embedding) + 1),
               i -> CAST(CAST(e.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE) AS REAL)) AS resid
@@ -3524,10 +2820,7 @@ object DataOpsQueries {
         penc AS (SELECT vec_id, j, code FROM (
           SELECT r2.vec_id, pcb.j, pcb.code,
             ROW_NUMBER() OVER (PARTITION BY r2.vec_id, pcb.j ORDER BY
-              list_reduce(list_transform(range(1, 5),
-                i -> (CAST(r2.resid[CAST(pcb.j * 4 + i AS INT)] AS DOUBLE) - CAST(pcb.pe[i] AS DOUBLE))
-                   * (CAST(r2.resid[CAST(pcb.j * 4 + i AS INT)] AS DOUBLE) - CAST(pcb.pe[i] AS DOUBLE))),
-                (x, y) -> x + y),
+              ${subL2sqSql("r2.resid", "pcb.j * 4", "pcb.pe", 4)},
               pcb.code) AS rk
           FROM rr r2 CROSS JOIN pcb) WHERE rk = 1),
         prec AS (SELECT penc.vec_id, flatten(list(pcb.pe ORDER BY penc.j)) AS re
@@ -3538,14 +2831,7 @@ object DataOpsQueries {
               i -> CAST(c.ce[i] AS DOUBLE) + CAST(p.re[i] AS DOUBLE)) AS xhat
           FROM rr JOIN prec p ON p.vec_id = rr.vec_id
           JOIN cent c ON c.cell = rr.cell),
-        qp AS (SELECT query_id, qe, cell FROM (
-          SELECT qv.query_id, qv.qe, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY qv.query_id ORDER BY
-              list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> (CAST(qv.qe[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))
-                   * (CAST(qv.qe[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))), (x, y) -> x + y),
-              c.cell) AS rk
-          FROM qv CROSS JOIN cent c) WHERE rk <= 4),
+        ${probeCte("qp", "cent", 4)},
         i0 AS (SELECT qp.query_id, x.vec_id AS neighbor_id,
             list_reduce(list_transform(range(1, len(x.xhat) + 1),
               i -> CAST(x.xhat[i] AS DOUBLE) * CAST(qp.qe[i] AS DOUBLE)), (x2, y) -> x2 + y)
@@ -3556,18 +2842,8 @@ object DataOpsQueries {
             AS cosine
           FROM ca JOIN xh x ON x.vec_id = ca.vec_id
           JOIN qp ON ca.cell = qp.cell AND ca.vec_id <> qp.query_id),
-        i5 AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM i0) WHERE rk <= 5),
-        hit AS (SELECT a.query_id, COUNT(*) AS n_hit FROM i5 a
-          JOIN br ON br.query_id = a.query_id AND br.neighbor_id = a.neighbor_id
-          GROUP BY a.query_id),
-        ex AS (SELECT query_id, COUNT(*) AS n_exact FROM br GROUP BY query_id)
-        SELECT ex.query_id, CAST(COALESCE(hit.n_hit, 0) AS INT) AS n_hit,
-          CAST(ex.n_exact AS INT) AS n_exact,
-          CAST(COALESCE(hit.n_hit, 0) AS DOUBLE) / ex.n_exact AS recall
-        FROM ex LEFT JOIN hit ON hit.query_id = ex.query_id
-        ORDER BY ex.query_id""")),
+        ${topKCte("i5", "i0", 5)},
+        ${recallTail("i5")}""")),
 
     // ---- INCREMENTAL index maintenance (qs27): the operational
     // question qs22-qs24 leave open — when a new batch of vectors
@@ -3614,87 +2890,19 @@ object DataOpsQueries {
             col("n_exact").cast("int").as("n_exact"), col("recall"))
           .orderBy(col("query_id"))
       },
-      Some("""WITH qv AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 4),
-        br0 AS (SELECT qv.query_id, e.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(e.embedding) + 1),
-              i -> CAST(e.embedding[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> CAST(qv.qe[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)))
-            AS cosine
-          FROM embeddings e, qv WHERE e.vec_id <> qv.query_id),
-        br AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM br0) WHERE rk <= 5),
-        seeds AS (SELECT embedding, ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS code
-          FROM (SELECT vec_id, embedding FROM embeddings
-                WHERE vec_id % 8 <> 0 ORDER BY vec_id LIMIT 256)),
-        cb AS (SELECT t.j, s.code,
-            list_slice(s.embedding, t.j * 4 + 1, t.j * 4 + 4) AS ce
-          FROM seeds s CROSS JOIN range(0, 16) t(j)),
-        enc AS (SELECT vec_id, j, code FROM (
-          SELECT e.vec_id, cb.j, cb.code,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id, cb.j ORDER BY
-              list_reduce(list_transform(range(1, 5),
-                i -> (CAST(e.embedding[CAST(cb.j * 4 + i AS INT)] AS DOUBLE) - CAST(cb.ce[i] AS DOUBLE))
-                   * (CAST(e.embedding[CAST(cb.j * 4 + i AS INT)] AS DOUBLE) - CAST(cb.ce[i] AS DOUBLE))),
-                (x, y) -> x + y),
-              cb.code) AS rk
-          FROM embeddings e CROSS JOIN cb) WHERE rk = 1),
-        cent AS (SELECT embedding AS ce,
-            ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell
-          FROM (SELECT vec_id, embedding FROM embeddings
-                WHERE vec_id % 8 <> 0 ORDER BY vec_id LIMIT 8)),
-        ca AS (SELECT vec_id, cell FROM (
-          SELECT e.vec_id, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-              list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> (CAST(e.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))
-                   * (CAST(e.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))), (x, y) -> x + y),
-              c.cell) AS rk
-          FROM embeddings e CROSS JOIN cent c) WHERE rk = 1),
-        qp AS (SELECT query_id, qe, cell FROM (
-          SELECT qv.query_id, qv.qe, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY qv.query_id ORDER BY
-              list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> (CAST(qv.qe[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))
-                   * (CAST(qv.qe[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))), (x, y) -> x + y),
-              c.cell) AS rk
-          FROM qv CROSS JOIN cent c) WHERE rk <= 4),
-        qn AS (SELECT query_id,
-            list_reduce(list_transform(range(1, len(qe) + 1),
-              i -> CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE)), (x, y) -> x + y) AS qnsq
-          FROM qv),
-        pj AS (SELECT enc.vec_id, qp.query_id, enc.j,
-            list_reduce(list_transform(range(1, 5),
-              i -> CAST(qp.qe[CAST(enc.j * 4 + i AS INT)] AS DOUBLE) * CAST(cb.ce[i] AS DOUBLE)),
-              (x, y) -> x + y) AS dotj,
-            list_reduce(list_transform(range(1, 5),
-              i -> CAST(cb.ce[i] AS DOUBLE) * CAST(cb.ce[i] AS DOUBLE)),
-              (x, y) -> x + y) AS nrmj
-          FROM enc JOIN cb ON cb.j = enc.j AND cb.code = enc.code
-          JOIN ca ON ca.vec_id = enc.vec_id
-          JOIN qp ON qp.cell = ca.cell AND enc.vec_id <> qp.query_id),
-        p0 AS (SELECT vec_id AS neighbor_id, query_id,
-            list_reduce(list(dotj ORDER BY j), (x, y) -> x + y) AS num,
-            list_reduce(list(nrmj ORDER BY j), (x, y) -> x + y) AS rn
-          FROM pj GROUP BY vec_id, query_id),
-        p1 AS (SELECT p0.query_id, p0.neighbor_id,
-            num / (sqrt(rn) * sqrt(qn.qnsq)) AS cosine
-          FROM p0 JOIN qn ON qn.query_id = p0.query_id),
-        p5 AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM p1) WHERE rk <= 5),
-        hit AS (SELECT a.query_id, COUNT(*) AS n_hit FROM p5 a
-          JOIN br ON br.query_id = a.query_id AND br.neighbor_id = a.neighbor_id
-          GROUP BY a.query_id),
-        ex AS (SELECT query_id, COUNT(*) AS n_exact FROM br GROUP BY query_id)
-        SELECT ex.query_id, CAST(COALESCE(hit.n_hit, 0) AS INT) AS n_hit,
-          CAST(ex.n_exact AS INT) AS n_exact,
-          CAST(COALESCE(hit.n_hit, 0) AS DOUBLE) / ex.n_exact AS recall
-        FROM ex LEFT JOIN hit ON hit.query_id = ex.query_id
-        ORDER BY ex.query_id""")),
+      Some(s"""WITH $qvCte,
+        ${bruteCtes("embeddings", "e", 5)},
+        ${codeSeedsCte("seeds", "embeddings WHERE vec_id % 8 <> 0", 256)},
+        ${codebookCte("cb", "seeds", 16, 4)},
+        ${encodeCte("enc", "embeddings", "e", "cb", 4)},
+        ${cellSeedsCte("cent", "embeddings WHERE vec_id % 8 <> 0", 8)},
+        ${cellCte("ca", "embeddings", "e", "cent")},
+        ${probeCte("qp", "cent", 4)},
+        $qnCte,
+        ${adcCtes("", "qp", "JOIN ca ON ca.vec_id = enc.vec_id JOIN qp ON qp.cell = ca.cell AND enc.vec_id <> qp.query_id")},
+        ${adcCosineCte("")},
+        ${topKCte("p5", "p1", 5)},
+        ${recallTail("p5")}""")),
 
     // ---- Per-dimension scalar quantization (qs28, the FAISS SQ8
     // layout) — the missing rung of the compression ladder between
@@ -3730,19 +2938,8 @@ object DataOpsQueries {
             col("n_exact").cast("int").as("n_exact"), col("recall"))
           .orderBy(col("query_id"))
       },
-      Some("""WITH qv AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 4),
-        br0 AS (SELECT qv.query_id, e.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(e.embedding) + 1),
-              i -> CAST(e.embedding[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> CAST(qv.qe[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)))
-            AS cosine
-          FROM embeddings e, qv WHERE e.vec_id <> qv.query_id),
-        br AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM br0) WHERE rk <= 5),
+      Some(s"""WITH $qvCte,
+        ${bruteCtes("embeddings", "e", 5)},
         smp AS (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 256),
         prm AS (SELECT r.i, MIN(CAST(s.embedding[r.i] AS DOUBLE)) AS mn,
             MAX(CAST(s.embedding[r.i] AS DOUBLE)) AS mx
@@ -3754,25 +2951,9 @@ object DataOpsQueries {
                 * (p.mx - p.mn) / 255.0 END AS xr
           FROM embeddings e CROSS JOIN prm p),
         rec AS (SELECT vec_id, list(xr ORDER BY i) AS recon FROM rx GROUP BY vec_id),
-        cent AS (SELECT embedding AS ce,
-            ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell
-          FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 8)),
-        ca AS (SELECT vec_id, cell FROM (
-          SELECT e.vec_id, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-              list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> (CAST(e.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))
-                   * (CAST(e.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))), (x, y) -> x + y),
-              c.cell) AS rk
-          FROM embeddings e CROSS JOIN cent c) WHERE rk = 1),
-        qp AS (SELECT query_id, qe, cell FROM (
-          SELECT qv.query_id, qv.qe, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY qv.query_id ORDER BY
-              list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> (CAST(qv.qe[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))
-                   * (CAST(qv.qe[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))), (x, y) -> x + y),
-              c.cell) AS rk
-          FROM qv CROSS JOIN cent c) WHERE rk <= 4),
+        ${cellSeedsCte("cent", "embeddings", 8)},
+        ${cellCte("ca", "embeddings", "e", "cent")},
+        ${probeCte("qp", "cent", 4)},
         i0 AS (SELECT qp.query_id, x.vec_id AS neighbor_id,
             list_reduce(list_transform(range(1, len(x.recon) + 1),
               i -> x.recon[i] * CAST(qp.qe[i] AS DOUBLE)), (x2, y) -> x2 + y)
@@ -3783,18 +2964,8 @@ object DataOpsQueries {
             AS cosine
           FROM ca JOIN rec x ON x.vec_id = ca.vec_id
           JOIN qp ON ca.cell = qp.cell AND ca.vec_id <> qp.query_id),
-        i5 AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM i0) WHERE rk <= 5),
-        hit AS (SELECT a.query_id, COUNT(*) AS n_hit FROM i5 a
-          JOIN br ON br.query_id = a.query_id AND br.neighbor_id = a.neighbor_id
-          GROUP BY a.query_id),
-        ex AS (SELECT query_id, COUNT(*) AS n_exact FROM br GROUP BY query_id)
-        SELECT ex.query_id, CAST(COALESCE(hit.n_hit, 0) AS INT) AS n_hit,
-          CAST(ex.n_exact AS INT) AS n_exact,
-          CAST(COALESCE(hit.n_hit, 0) AS DOUBLE) / ex.n_exact AS recall
-        FROM ex LEFT JOIN hit ON hit.query_id = ex.query_id
-        ORDER BY ex.query_id""")),
+        ${topKCte("i5", "i0", 5)},
+        ${recallTail("i5")}""")),
 
     // ---- TWO-STAGE retrieval composite (qs29): the production
     // pattern the compression ladder implies, composed end-to-end as
@@ -3835,99 +3006,17 @@ object DataOpsQueries {
             col("n_exact").cast("int").as("n_exact"), col("recall"))
           .orderBy(col("query_id"))
       },
-      Some("""WITH qv AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 4),
-        br0 AS (SELECT qv.query_id, e.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(e.embedding) + 1),
-              i -> CAST(e.embedding[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> CAST(qv.qe[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)))
-            AS cosine
-          FROM embeddings e, qv WHERE e.vec_id <> qv.query_id),
-        br AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM br0) WHERE rk <= 5),
-        smp AS (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 256),
-        thr AS (SELECT r.i,
-            list_reduce(list(CAST(s.embedding[r.i] AS DOUBLE) ORDER BY s.vec_id),
-              (x, y) -> x + y) / CAST(COUNT(*) AS DOUBLE) AS t
-          FROM smp s CROSS JOIN range(1, 65) r(i) GROUP BY r.i),
-        cbits AS (SELECT e.vec_id, CAST(SUM(
-            CASE WHEN CAST(e.embedding[thr.i] AS DOUBLE) > thr.t
-              THEN CASE WHEN thr.i = 64 THEN -9223372036854775807::BIGINT - 1::BIGINT
-                ELSE 1::BIGINT << CAST(thr.i - 1 AS INT) END
-              ELSE 0::BIGINT END) AS BIGINT) AS code
-          FROM embeddings e CROSS JOIN thr GROUP BY e.vec_id),
-        qbits AS (SELECT qv.query_id, CAST(SUM(
-            CASE WHEN CAST(qv.qe[thr.i] AS DOUBLE) > thr.t
-              THEN CASE WHEN thr.i = 64 THEN -9223372036854775807::BIGINT - 1::BIGINT
-                ELSE 1::BIGINT << CAST(thr.i - 1 AS INT) END
-              ELSE 0::BIGINT END) AS BIGINT) AS qcode
-          FROM qv CROSS JOIN thr GROUP BY qv.query_id),
-        c50 AS (SELECT query_id, neighbor_id FROM (
-          SELECT qb.query_id, cb2.vec_id AS neighbor_id,
-            ROW_NUMBER() OVER (PARTITION BY qb.query_id
-              ORDER BY bit_count(xor(cb2.code, qb.qcode)), cb2.vec_id) AS rk
-          FROM cbits cb2, qbits qb WHERE cb2.vec_id <> qb.query_id) WHERE rk <= 50),
-        seeds AS (SELECT embedding, ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS code
-          FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 256)),
-        cb AS (SELECT t.j, s.code,
-            list_slice(s.embedding, t.j * 4 + 1, t.j * 4 + 4) AS ce
-          FROM seeds s CROSS JOIN range(0, 16) t(j)),
-        enc AS (SELECT vec_id, j, code FROM (
-          SELECT e.vec_id, cb.j, cb.code,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id, cb.j ORDER BY
-              list_reduce(list_transform(range(1, 5),
-                i -> (CAST(e.embedding[CAST(cb.j * 4 + i AS INT)] AS DOUBLE) - CAST(cb.ce[i] AS DOUBLE))
-                   * (CAST(e.embedding[CAST(cb.j * 4 + i AS INT)] AS DOUBLE) - CAST(cb.ce[i] AS DOUBLE))),
-                (x, y) -> x + y),
-              cb.code) AS rk
-          FROM embeddings e CROSS JOIN cb) WHERE rk = 1),
-        qn AS (SELECT query_id,
-            list_reduce(list_transform(range(1, len(qe) + 1),
-              i -> CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE)), (x, y) -> x + y) AS qnsq
-          FROM qv),
-        pj AS (SELECT enc.vec_id, qv.query_id, enc.j,
-            list_reduce(list_transform(range(1, 5),
-              i -> CAST(qv.qe[CAST(enc.j * 4 + i AS INT)] AS DOUBLE) * CAST(cb.ce[i] AS DOUBLE)),
-              (x, y) -> x + y) AS dotj,
-            list_reduce(list_transform(range(1, 5),
-              i -> CAST(cb.ce[i] AS DOUBLE) * CAST(cb.ce[i] AS DOUBLE)),
-              (x, y) -> x + y) AS nrmj
-          FROM enc JOIN cb ON cb.j = enc.j AND cb.code = enc.code
-          JOIN c50 ON c50.neighbor_id = enc.vec_id
-          JOIN qv ON qv.query_id = c50.query_id),
-        p0 AS (SELECT vec_id AS neighbor_id, query_id,
-            list_reduce(list(dotj ORDER BY j), (x, y) -> x + y) AS num,
-            list_reduce(list(nrmj ORDER BY j), (x, y) -> x + y) AS rn
-          FROM pj GROUP BY vec_id, query_id),
-        s20 AS (SELECT query_id, neighbor_id FROM (
-          SELECT p0.query_id, p0.neighbor_id, ROW_NUMBER() OVER (PARTITION BY p0.query_id
-            ORDER BY num / (sqrt(rn) * sqrt(qn.qnsq)) DESC, p0.neighbor_id) AS rk
-          FROM p0 JOIN qn ON qn.query_id = p0.query_id) WHERE rk <= 20),
-        x0 AS (SELECT s20.query_id, s20.neighbor_id,
-            list_reduce(list_transform(range(1, len(e.embedding) + 1),
-              i -> CAST(e.embedding[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> CAST(qv.qe[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)))
-            AS cosine
-          FROM s20 JOIN embeddings e ON e.vec_id = s20.neighbor_id
-          JOIN qv ON qv.query_id = s20.query_id),
-        f5 AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM x0) WHERE rk <= 5),
-        hit AS (SELECT a.query_id, COUNT(*) AS n_hit FROM f5 a
-          JOIN br ON br.query_id = a.query_id AND br.neighbor_id = a.neighbor_id
-          GROUP BY a.query_id),
-        ex AS (SELECT query_id, COUNT(*) AS n_exact FROM br GROUP BY query_id)
-        SELECT ex.query_id, CAST(COALESCE(hit.n_hit, 0) AS INT) AS n_hit,
-          CAST(ex.n_exact AS INT) AS n_exact,
-          CAST(COALESCE(hit.n_hit, 0) AS DOUBLE) / ex.n_exact AS recall
-        FROM ex LEFT JOIN hit ON hit.query_id = ex.query_id
-        ORDER BY ex.query_id""")),
+      Some(s"""WITH $qvCte,
+        ${bruteCtes("embeddings", "e", 5)},
+        $signBitsCtes,
+        $hammingC50Cte,
+        ${codeSeedsCte("seeds", "embeddings", 256)},
+        ${codebookCte("cb", "seeds", 16, 4)},
+        ${encodeCte("enc", "embeddings", "e", "cb", 4)},
+        $qnCte,
+        $twoStageRerankCtes,
+        ${topKCte("f5", "x0", 5)},
+        ${recallTail("f5")}""")),
 
     // ---- Two-stage retrieval composed INSIDE the IVF probe (qs32):
     // the judge of deployability vs qs29's full-corpus popcount scan.
@@ -3963,120 +3052,20 @@ object DataOpsQueries {
             col("n_exact").cast("int").as("n_exact"), col("recall"))
           .orderBy(col("query_id"))
       },
-      Some("""WITH qv AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 4),
-        br0 AS (SELECT qv.query_id, e.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(e.embedding) + 1),
-              i -> CAST(e.embedding[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> CAST(qv.qe[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)))
-            AS cosine
-          FROM embeddings e, qv WHERE e.vec_id <> qv.query_id),
-        br AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM br0) WHERE rk <= 5),
-        smp AS (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 256),
-        thr AS (SELECT r.i,
-            list_reduce(list(CAST(s.embedding[r.i] AS DOUBLE) ORDER BY s.vec_id),
-              (x, y) -> x + y) / CAST(COUNT(*) AS DOUBLE) AS t
-          FROM smp s CROSS JOIN range(1, 65) r(i) GROUP BY r.i),
-        cbits AS (SELECT e.vec_id, CAST(SUM(
-            CASE WHEN CAST(e.embedding[thr.i] AS DOUBLE) > thr.t
-              THEN CASE WHEN thr.i = 64 THEN -9223372036854775807::BIGINT - 1::BIGINT
-                ELSE 1::BIGINT << CAST(thr.i - 1 AS INT) END
-              ELSE 0::BIGINT END) AS BIGINT) AS code
-          FROM embeddings e CROSS JOIN thr GROUP BY e.vec_id),
-        qbits AS (SELECT qv.query_id, CAST(SUM(
-            CASE WHEN CAST(qv.qe[thr.i] AS DOUBLE) > thr.t
-              THEN CASE WHEN thr.i = 64 THEN -9223372036854775807::BIGINT - 1::BIGINT
-                ELSE 1::BIGINT << CAST(thr.i - 1 AS INT) END
-              ELSE 0::BIGINT END) AS BIGINT) AS qcode
-          FROM qv CROSS JOIN thr GROUP BY qv.query_id),
-        cent AS (SELECT embedding AS ce,
-            ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell
-          FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 8)),
-        ca AS (SELECT vec_id, cell FROM (
-          SELECT e.vec_id, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-              list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> (CAST(e.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))
-                   * (CAST(e.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))), (x, y) -> x + y),
-              c.cell) AS rk
-          FROM embeddings e CROSS JOIN cent c) WHERE rk = 1),
-        qp AS (SELECT query_id, qe, cell FROM (
-          SELECT qv.query_id, qv.qe, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY qv.query_id ORDER BY
-              list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> (CAST(qv.qe[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))
-                   * (CAST(qv.qe[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))), (x, y) -> x + y),
-              c.cell) AS rk
-          FROM qv CROSS JOIN cent c) WHERE rk <= 4),
-        seeds AS (SELECT embedding, ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS code
-          FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 256)),
-        cb AS (SELECT t.j, s.code,
-            list_slice(s.embedding, t.j * 4 + 1, t.j * 4 + 4) AS ce
-          FROM seeds s CROSS JOIN range(0, 16) t(j)),
-        enc AS (SELECT vec_id, j, code FROM (
-          SELECT e.vec_id, cb.j, cb.code,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id, cb.j ORDER BY
-              list_reduce(list_transform(range(1, 5),
-                i -> (CAST(e.embedding[CAST(cb.j * 4 + i AS INT)] AS DOUBLE) - CAST(cb.ce[i] AS DOUBLE))
-                   * (CAST(e.embedding[CAST(cb.j * 4 + i AS INT)] AS DOUBLE) - CAST(cb.ce[i] AS DOUBLE))),
-                (x, y) -> x + y),
-              cb.code) AS rk
-          FROM embeddings e CROSS JOIN cb) WHERE rk = 1),
-        qn AS (SELECT query_id,
-            list_reduce(list_transform(range(1, len(qe) + 1),
-              i -> CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE)), (x, y) -> x + y) AS qnsq
-          FROM qv),
-        c50 AS (SELECT query_id, neighbor_id FROM (
-          SELECT qp.query_id, cb2.vec_id AS neighbor_id,
-            ROW_NUMBER() OVER (PARTITION BY qp.query_id
-              ORDER BY bit_count(xor(cb2.code, qb.qcode)), cb2.vec_id) AS rk
-          FROM cbits cb2 JOIN ca ON ca.vec_id = cb2.vec_id
-          JOIN qp ON qp.cell = ca.cell AND cb2.vec_id <> qp.query_id
-          JOIN qbits qb ON qb.query_id = qp.query_id) WHERE rk <= 50),
-        pj AS (SELECT enc.vec_id, qv.query_id, enc.j,
-            list_reduce(list_transform(range(1, 5),
-              i -> CAST(qv.qe[CAST(enc.j * 4 + i AS INT)] AS DOUBLE) * CAST(cb.ce[i] AS DOUBLE)),
-              (x, y) -> x + y) AS dotj,
-            list_reduce(list_transform(range(1, 5),
-              i -> CAST(cb.ce[i] AS DOUBLE) * CAST(cb.ce[i] AS DOUBLE)),
-              (x, y) -> x + y) AS nrmj
-          FROM enc JOIN cb ON cb.j = enc.j AND cb.code = enc.code
-          JOIN c50 ON c50.neighbor_id = enc.vec_id
-          JOIN qv ON qv.query_id = c50.query_id),
-        p0 AS (SELECT vec_id AS neighbor_id, query_id,
-            list_reduce(list(dotj ORDER BY j), (x, y) -> x + y) AS num,
-            list_reduce(list(nrmj ORDER BY j), (x, y) -> x + y) AS rn
-          FROM pj GROUP BY vec_id, query_id),
-        s20 AS (SELECT query_id, neighbor_id FROM (
-          SELECT p0.query_id, p0.neighbor_id, ROW_NUMBER() OVER (PARTITION BY p0.query_id
-            ORDER BY num / (sqrt(rn) * sqrt(qn.qnsq)) DESC, p0.neighbor_id) AS rk
-          FROM p0 JOIN qn ON qn.query_id = p0.query_id) WHERE rk <= 20),
-        x0 AS (SELECT s20.query_id, s20.neighbor_id,
-            list_reduce(list_transform(range(1, len(e.embedding) + 1),
-              i -> CAST(e.embedding[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> CAST(qv.qe[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)))
-            AS cosine
-          FROM s20 JOIN embeddings e ON e.vec_id = s20.neighbor_id
-          JOIN qv ON qv.query_id = s20.query_id),
-        f5 AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM x0) WHERE rk <= 5),
-        hit AS (SELECT a.query_id, COUNT(*) AS n_hit FROM f5 a
-          JOIN br ON br.query_id = a.query_id AND br.neighbor_id = a.neighbor_id
-          GROUP BY a.query_id),
-        ex AS (SELECT query_id, COUNT(*) AS n_exact FROM br GROUP BY query_id)
-        SELECT ex.query_id, CAST(COALESCE(hit.n_hit, 0) AS INT) AS n_hit,
-          CAST(ex.n_exact AS INT) AS n_exact,
-          CAST(COALESCE(hit.n_hit, 0) AS DOUBLE) / ex.n_exact AS recall
-        FROM ex LEFT JOIN hit ON hit.query_id = ex.query_id
-        ORDER BY ex.query_id""")),
+      Some(s"""WITH $qvCte,
+        ${bruteCtes("embeddings", "e", 5)},
+        $signBitsCtes,
+        ${cellSeedsCte("cent", "embeddings", 8)},
+        ${cellCte("ca", "embeddings", "e", "cent")},
+        ${probeCte("qp", "cent", 4)},
+        ${codeSeedsCte("seeds", "embeddings", 256)},
+        ${codebookCte("cb", "seeds", 16, 4)},
+        ${encodeCte("enc", "embeddings", "e", "cb", 4)},
+        $qnCte,
+        $probedHammingC50Cte,
+        $twoStageRerankCtes,
+        ${topKCte("f5", "x0", 5)},
+        ${recallTail("f5")}""")),
 
     // ---- Two-stage serving LIFECYCLE (qs33): the qs32 composite
     // given the same production treatment the ADC form has — the
@@ -4149,73 +3138,16 @@ object DataOpsQueries {
             .foreach(pth => java.nio.file.Files.deleteIfExists(pth))
         }
       },
-      Some("""WITH qv AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 4),
-        br0 AS (SELECT qv.query_id, e.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(e.embedding) + 1),
-              i -> CAST(e.embedding[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> CAST(qv.qe[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)))
-            AS cosine
-          FROM embeddings e, qv WHERE e.vec_id <> qv.query_id AND e.vec_id % 8 <> 3),
-        br AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM br0) WHERE rk <= 5),
-        smp AS (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 256),
-        thr AS (SELECT r.i,
-            list_reduce(list(CAST(s.embedding[r.i] AS DOUBLE) ORDER BY s.vec_id),
-              (x, y) -> x + y) / CAST(COUNT(*) AS DOUBLE) AS t
-          FROM smp s CROSS JOIN range(1, 65) r(i) GROUP BY r.i),
-        cbits AS (SELECT e.vec_id, CAST(SUM(
-            CASE WHEN CAST(e.embedding[thr.i] AS DOUBLE) > thr.t
-              THEN CASE WHEN thr.i = 64 THEN -9223372036854775807::BIGINT - 1::BIGINT
-                ELSE 1::BIGINT << CAST(thr.i - 1 AS INT) END
-              ELSE 0::BIGINT END) AS BIGINT) AS code
-          FROM embeddings e CROSS JOIN thr GROUP BY e.vec_id),
-        qbits AS (SELECT qv.query_id, CAST(SUM(
-            CASE WHEN CAST(qv.qe[thr.i] AS DOUBLE) > thr.t
-              THEN CASE WHEN thr.i = 64 THEN -9223372036854775807::BIGINT - 1::BIGINT
-                ELSE 1::BIGINT << CAST(thr.i - 1 AS INT) END
-              ELSE 0::BIGINT END) AS BIGINT) AS qcode
-          FROM qv CROSS JOIN thr GROUP BY qv.query_id),
-        cent AS (SELECT embedding AS ce,
-            ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell
-          FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 8)),
-        ca AS (SELECT vec_id, cell FROM (
-          SELECT e.vec_id, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-              list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> (CAST(e.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))
-                   * (CAST(e.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))), (x, y) -> x + y),
-              c.cell) AS rk
-          FROM embeddings e CROSS JOIN cent c) WHERE rk = 1),
-        qp AS (SELECT query_id, qe, cell FROM (
-          SELECT qv.query_id, qv.qe, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY qv.query_id ORDER BY
-              list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> (CAST(qv.qe[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))
-                   * (CAST(qv.qe[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))), (x, y) -> x + y),
-              c.cell) AS rk
-          FROM qv CROSS JOIN cent c) WHERE rk <= 4),
-        seeds AS (SELECT embedding, ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS code
-          FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 256)),
-        cb AS (SELECT t.j, s.code,
-            list_slice(s.embedding, t.j * 4 + 1, t.j * 4 + 4) AS ce
-          FROM seeds s CROSS JOIN range(0, 16) t(j)),
-        enc AS (SELECT vec_id, j, code FROM (
-          SELECT e.vec_id, cb.j, cb.code,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id, cb.j ORDER BY
-              list_reduce(list_transform(range(1, 5),
-                i -> (CAST(e.embedding[CAST(cb.j * 4 + i AS INT)] AS DOUBLE) - CAST(cb.ce[i] AS DOUBLE))
-                   * (CAST(e.embedding[CAST(cb.j * 4 + i AS INT)] AS DOUBLE) - CAST(cb.ce[i] AS DOUBLE))),
-                (x, y) -> x + y),
-              cb.code) AS rk
-          FROM embeddings e CROSS JOIN cb) WHERE rk = 1),
-        qn AS (SELECT query_id,
-            list_reduce(list_transform(range(1, len(qe) + 1),
-              i -> CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE)), (x, y) -> x + y) AS qnsq
-          FROM qv),
+      Some(s"""WITH $qvCte,
+        ${liveBruteCtes("embeddings", "e", 5, "e.vec_id % 8 <> 3")},
+        $signBitsCtes,
+        ${cellSeedsCte("cent", "embeddings", 8)},
+        ${cellCte("ca", "embeddings", "e", "cent")},
+        ${probeCte("qp", "cent", 4)},
+        ${codeSeedsCte("seeds", "embeddings", 256)},
+        ${codebookCte("cb", "seeds", 16, 4)},
+        ${encodeCte("enc", "embeddings", "e", "cb", 4)},
+        $qnCte,
         c50 AS (SELECT query_id, neighbor_id FROM (
           SELECT qp.query_id, cb2.vec_id AS neighbor_id,
             ROW_NUMBER() OVER (PARTITION BY qp.query_id
@@ -4223,46 +3155,9 @@ object DataOpsQueries {
           FROM cbits cb2 JOIN ca ON ca.vec_id = cb2.vec_id AND cb2.vec_id % 8 <> 3
           JOIN qp ON qp.cell = ca.cell AND cb2.vec_id <> qp.query_id
           JOIN qbits qb ON qb.query_id = qp.query_id) WHERE rk <= 50),
-        pj AS (SELECT enc.vec_id, qv.query_id, enc.j,
-            list_reduce(list_transform(range(1, 5),
-              i -> CAST(qv.qe[CAST(enc.j * 4 + i AS INT)] AS DOUBLE) * CAST(cb.ce[i] AS DOUBLE)),
-              (x, y) -> x + y) AS dotj,
-            list_reduce(list_transform(range(1, 5),
-              i -> CAST(cb.ce[i] AS DOUBLE) * CAST(cb.ce[i] AS DOUBLE)),
-              (x, y) -> x + y) AS nrmj
-          FROM enc JOIN cb ON cb.j = enc.j AND cb.code = enc.code
-          JOIN c50 ON c50.neighbor_id = enc.vec_id
-          JOIN qv ON qv.query_id = c50.query_id),
-        p0 AS (SELECT vec_id AS neighbor_id, query_id,
-            list_reduce(list(dotj ORDER BY j), (x, y) -> x + y) AS num,
-            list_reduce(list(nrmj ORDER BY j), (x, y) -> x + y) AS rn
-          FROM pj GROUP BY vec_id, query_id),
-        s20 AS (SELECT query_id, neighbor_id FROM (
-          SELECT p0.query_id, p0.neighbor_id, ROW_NUMBER() OVER (PARTITION BY p0.query_id
-            ORDER BY num / (sqrt(rn) * sqrt(qn.qnsq)) DESC, p0.neighbor_id) AS rk
-          FROM p0 JOIN qn ON qn.query_id = p0.query_id) WHERE rk <= 20),
-        x0 AS (SELECT s20.query_id, s20.neighbor_id,
-            list_reduce(list_transform(range(1, len(e.embedding) + 1),
-              i -> CAST(e.embedding[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> CAST(qv.qe[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)))
-            AS cosine
-          FROM s20 JOIN embeddings e ON e.vec_id = s20.neighbor_id
-          JOIN qv ON qv.query_id = s20.query_id),
-        f5 AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM x0) WHERE rk <= 5),
-        hit AS (SELECT a.query_id, COUNT(*) AS n_hit FROM f5 a
-          JOIN br ON br.query_id = a.query_id AND br.neighbor_id = a.neighbor_id
-          GROUP BY a.query_id),
-        ex AS (SELECT query_id, COUNT(*) AS n_exact FROM br GROUP BY query_id)
-        SELECT ex.query_id, CAST(COALESCE(hit.n_hit, 0) AS INT) AS n_hit,
-          CAST(ex.n_exact AS INT) AS n_exact,
-          CAST(COALESCE(hit.n_hit, 0) AS DOUBLE) / ex.n_exact AS recall
-        FROM ex LEFT JOIN hit ON hit.query_id = ex.query_id
-        ORDER BY ex.query_id""")),
+        $twoStageRerankCtes,
+        ${topKCte("f5", "x0", 5)},
+        ${recallTail("f5")}""")),
 
     // ---- IVF index-health audit + refit trigger (qs34): the serving
     // lifecycle's missing ALARM. qs27 established that appends ride a
@@ -4616,85 +3511,19 @@ object DataOpsQueries {
             col("n_exact").cast("int").as("n_exact"), col("recall"))
           .orderBy(col("query_id"))
       },
-      Some("""WITH qv AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 4),
-        br0 AS (SELECT qv.query_id, e.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(e.embedding) + 1),
-              i -> CAST(e.embedding[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> CAST(qv.qe[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)))
-            AS cosine
-          FROM embeddings e, qv WHERE e.vec_id <> qv.query_id AND e.vec_id % 8 <> 3),
-        br AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM br0) WHERE rk <= 5),
-        seeds AS (SELECT embedding, ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS code
-          FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 256)),
-        cb AS (SELECT t.j, s.code,
-            list_slice(s.embedding, t.j * 4 + 1, t.j * 4 + 4) AS ce
-          FROM seeds s CROSS JOIN range(0, 16) t(j)),
-        enc AS (SELECT vec_id, j, code FROM (
-          SELECT e.vec_id, cb.j, cb.code,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id, cb.j ORDER BY
-              list_reduce(list_transform(range(1, 5),
-                i -> (CAST(e.embedding[CAST(cb.j * 4 + i AS INT)] AS DOUBLE) - CAST(cb.ce[i] AS DOUBLE))
-                   * (CAST(e.embedding[CAST(cb.j * 4 + i AS INT)] AS DOUBLE) - CAST(cb.ce[i] AS DOUBLE))),
-                (x, y) -> x + y),
-              cb.code) AS rk
-          FROM embeddings e CROSS JOIN cb) WHERE rk = 1),
-        cent AS (SELECT embedding AS ce,
-            ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell
-          FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 8)),
-        ca AS (SELECT vec_id, cell FROM (
-          SELECT e.vec_id, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-              list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> (CAST(e.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))
-                   * (CAST(e.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))), (x, y) -> x + y),
-              c.cell) AS rk
-          FROM embeddings e CROSS JOIN cent c) WHERE rk = 1),
-        qp AS (SELECT query_id, qe, cell FROM (
-          SELECT qv.query_id, qv.qe, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY qv.query_id ORDER BY
-              list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> (CAST(qv.qe[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))
-                   * (CAST(qv.qe[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))), (x, y) -> x + y),
-              c.cell) AS rk
-          FROM qv CROSS JOIN cent c) WHERE rk <= 4),
-        qn AS (SELECT query_id,
-            list_reduce(list_transform(range(1, len(qe) + 1),
-              i -> CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE)), (x, y) -> x + y) AS qnsq
-          FROM qv),
-        pj AS (SELECT enc.vec_id, qp.query_id, enc.j,
-            list_reduce(list_transform(range(1, 5),
-              i -> CAST(qp.qe[CAST(enc.j * 4 + i AS INT)] AS DOUBLE) * CAST(cb.ce[i] AS DOUBLE)),
-              (x, y) -> x + y) AS dotj,
-            list_reduce(list_transform(range(1, 5),
-              i -> CAST(cb.ce[i] AS DOUBLE) * CAST(cb.ce[i] AS DOUBLE)),
-              (x, y) -> x + y) AS nrmj
-          FROM enc JOIN cb ON cb.j = enc.j AND cb.code = enc.code
-          JOIN ca ON ca.vec_id = enc.vec_id AND ca.vec_id % 8 <> 3
-          JOIN qp ON qp.cell = ca.cell AND enc.vec_id <> qp.query_id),
-        p0 AS (SELECT vec_id AS neighbor_id, query_id,
-            list_reduce(list(dotj ORDER BY j), (x, y) -> x + y) AS num,
-            list_reduce(list(nrmj ORDER BY j), (x, y) -> x + y) AS rn
-          FROM pj GROUP BY vec_id, query_id),
-        p1 AS (SELECT p0.query_id, p0.neighbor_id,
-            num / (sqrt(rn) * sqrt(qn.qnsq)) AS cosine
-          FROM p0 JOIN qn ON qn.query_id = p0.query_id),
-        p5 AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM p1) WHERE rk <= 5),
-        hit AS (SELECT a.query_id, COUNT(*) AS n_hit FROM p5 a
-          JOIN br ON br.query_id = a.query_id AND br.neighbor_id = a.neighbor_id
-          GROUP BY a.query_id),
-        ex AS (SELECT query_id, COUNT(*) AS n_exact FROM br GROUP BY query_id)
-        SELECT ex.query_id, CAST(COALESCE(hit.n_hit, 0) AS INT) AS n_hit,
-          CAST(ex.n_exact AS INT) AS n_exact,
-          CAST(COALESCE(hit.n_hit, 0) AS DOUBLE) / ex.n_exact AS recall
-        FROM ex LEFT JOIN hit ON hit.query_id = ex.query_id
-        ORDER BY ex.query_id""")),
+      Some(s"""WITH $qvCte,
+        ${liveBruteCtes("embeddings", "e", 5, "e.vec_id % 8 <> 3")},
+        ${codeSeedsCte("seeds", "embeddings", 256)},
+        ${codebookCte("cb", "seeds", 16, 4)},
+        ${encodeCte("enc", "embeddings", "e", "cb", 4)},
+        ${cellSeedsCte("cent", "embeddings", 8)},
+        ${cellCte("ca", "embeddings", "e", "cent")},
+        ${probeCte("qp", "cent", 4)},
+        $qnCte,
+        ${adcCtes("", "qp", "JOIN ca ON ca.vec_id = enc.vec_id AND ca.vec_id % 8 <> 3 JOIN qp ON qp.cell = ca.cell AND enc.vec_id <> qp.query_id")},
+        ${adcCosineCte("")},
+        ${topKCte("p5", "p1", 5)},
+        ${recallTail("p5")}""")),
 
     // ---- SEMANTIC decontamination (qs31): the paraphrase-leakage
     // guard the n-gram family (qt9/qt13/qt15) cannot provide — a
@@ -4719,14 +3548,9 @@ object DataOpsQueries {
             "vec_id", "embedding", "eval_id", "ee", threshold = 0.35)
           .orderBy(col("vec_id"))
       },
-      Some("""WITH ev AS (SELECT vec_id AS eval_id, embedding AS ee FROM embeddings WHERE vec_id < 8),
+      Some(s"""WITH ev AS (SELECT vec_id AS eval_id, embedding AS ee FROM embeddings WHERE vec_id < 8),
         sc AS (SELECT e.vec_id, ev.eval_id,
-            list_reduce(list_transform(range(1, len(e.embedding) + 1),
-              i -> CAST(e.embedding[i] AS DOUBLE) * CAST(ev.ee[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(ev.ee) + 1),
-                i -> CAST(ev.ee[i] AS DOUBLE) * CAST(ev.ee[i] AS DOUBLE)), (x, y) -> x + y)))
+            ${cosineSql("e.embedding", "ev.ee")}
             AS cosine
           FROM embeddings e CROSS JOIN ev WHERE e.vec_id <> ev.eval_id)
         SELECT vec_id, eval_id AS nearest_eval_id,
@@ -8035,65 +6859,17 @@ object DataOpsQueries {
             .orderBy(col("query_id"), col("rank"))
         }
       },
-      Some("""WITH qv AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 4),
-        seeds AS (SELECT embedding, ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS code
-          FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 256)),
-        cb AS (SELECT t.j, s.code,
-            list_slice(s.embedding, t.j * 4 + 1, t.j * 4 + 4) AS ce
-          FROM seeds s CROSS JOIN range(0, 16) t(j)),
-        enc AS (SELECT vec_id, j, code FROM (
-          SELECT e.vec_id, cb.j, cb.code,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id, cb.j ORDER BY
-              list_reduce(list_transform(range(1, 5),
-                i -> (CAST(e.embedding[CAST(cb.j * 4 + i AS INT)] AS DOUBLE) - CAST(cb.ce[i] AS DOUBLE))
-                   * (CAST(e.embedding[CAST(cb.j * 4 + i AS INT)] AS DOUBLE) - CAST(cb.ce[i] AS DOUBLE))),
-                (x, y) -> x + y),
-              cb.code) AS rk
-          FROM embeddings e CROSS JOIN cb) WHERE rk = 1),
-        cent AS (SELECT embedding AS ce,
-            ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell
-          FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 8)),
-        ca AS (SELECT vec_id, cell FROM (
-          SELECT e.vec_id, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-              list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> (CAST(e.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))
-                   * (CAST(e.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))), (x, y) -> x + y),
-              c.cell) AS rk
-          FROM embeddings e CROSS JOIN cent c) WHERE rk = 1),
-        qp AS (SELECT query_id, qe, cell FROM (
-          SELECT qv.query_id, qv.qe, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY qv.query_id ORDER BY
-              list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> (CAST(qv.qe[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))
-                   * (CAST(qv.qe[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))), (x, y) -> x + y),
-              c.cell) AS rk
-          FROM qv CROSS JOIN cent c) WHERE rk <= 4),
-        qn AS (SELECT query_id,
-            list_reduce(list_transform(range(1, len(qe) + 1),
-              i -> CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE)), (x, y) -> x + y) AS qnsq
-          FROM qv),
-        pj AS (SELECT enc.vec_id, qp.query_id, enc.j,
-            list_reduce(list_transform(range(1, 5),
-              i -> CAST(qp.qe[CAST(enc.j * 4 + i AS INT)] AS DOUBLE) * CAST(cb.ce[i] AS DOUBLE)),
-              (x, y) -> x + y) AS dotj,
-            list_reduce(list_transform(range(1, 5),
-              i -> CAST(cb.ce[i] AS DOUBLE) * CAST(cb.ce[i] AS DOUBLE)),
-              (x, y) -> x + y) AS nrmj
-          FROM enc JOIN cb ON cb.j = enc.j AND cb.code = enc.code
-          JOIN ca ON ca.vec_id = enc.vec_id
-          JOIN qp ON qp.cell = ca.cell AND enc.vec_id <> qp.query_id),
-        p0 AS (SELECT vec_id AS neighbor_id, query_id,
-            list_reduce(list(dotj ORDER BY j), (x, y) -> x + y) AS num,
-            list_reduce(list(nrmj ORDER BY j), (x, y) -> x + y) AS rn
-          FROM pj GROUP BY vec_id, query_id),
-        p1 AS (SELECT p0.query_id, p0.neighbor_id,
-            num / (sqrt(rn) * sqrt(qn.qnsq)) AS cosine
-          FROM p0 JOIN qn ON qn.query_id = p0.query_id)
-        SELECT query_id, neighbor_id, CAST(rk AS INT) AS rank FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM p1) WHERE rk <= 5
-        ORDER BY query_id, rank""")),
+      Some(s"""WITH $qvCte,
+        ${codeSeedsCte("seeds", "embeddings", 256)},
+        ${codebookCte("cb", "seeds", 16, 4)},
+        ${encodeCte("enc", "embeddings", "e", "cb", 4)},
+        ${cellSeedsCte("cent", "embeddings", 8)},
+        ${cellCte("ca", "embeddings", "e", "cent")},
+        ${probeCte("qp", "cent", 4)},
+        $qnCte,
+        ${adcCtes("", "qp", "JOIN ca ON ca.vec_id = enc.vec_id JOIN qp ON qp.cell = ca.cell AND enc.vec_id <> qp.query_id")},
+        ${adcCosineCte("")}
+        ${rankedTopKSql("p1", 5)}""")),
 
     // ---- Streaming MEDIA dedup-on-ingest ≡ batch (the qst8/qst9/qst10
     // treatment applied to the multimodal column): media payloads
@@ -8232,79 +7008,15 @@ object DataOpsQueries {
             .orderBy(col("query_id"), col("rank"))
         }
       },
-      Some("""WITH qv AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 4),
-        smp AS (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 256),
-        thr AS (SELECT r.i,
-            list_reduce(list(CAST(s.embedding[r.i] AS DOUBLE) ORDER BY s.vec_id),
-              (x, y) -> x + y) / CAST(COUNT(*) AS DOUBLE) AS t
-          FROM smp s CROSS JOIN range(1, 65) r(i) GROUP BY r.i),
-        cbits AS (SELECT e.vec_id, CAST(SUM(
-            CASE WHEN CAST(e.embedding[thr.i] AS DOUBLE) > thr.t
-              THEN CASE WHEN thr.i = 64 THEN -9223372036854775807::BIGINT - 1::BIGINT
-                ELSE 1::BIGINT << CAST(thr.i - 1 AS INT) END
-              ELSE 0::BIGINT END) AS BIGINT) AS code
-          FROM embeddings e CROSS JOIN thr GROUP BY e.vec_id),
-        qbits AS (SELECT qv.query_id, CAST(SUM(
-            CASE WHEN CAST(qv.qe[thr.i] AS DOUBLE) > thr.t
-              THEN CASE WHEN thr.i = 64 THEN -9223372036854775807::BIGINT - 1::BIGINT
-                ELSE 1::BIGINT << CAST(thr.i - 1 AS INT) END
-              ELSE 0::BIGINT END) AS BIGINT) AS qcode
-          FROM qv CROSS JOIN thr GROUP BY qv.query_id),
-        c50 AS (SELECT query_id, neighbor_id FROM (
-          SELECT qb.query_id, cb2.vec_id AS neighbor_id,
-            ROW_NUMBER() OVER (PARTITION BY qb.query_id
-              ORDER BY bit_count(xor(cb2.code, qb.qcode)), cb2.vec_id) AS rk
-          FROM cbits cb2, qbits qb WHERE cb2.vec_id <> qb.query_id) WHERE rk <= 50),
-        seeds AS (SELECT embedding, ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS code
-          FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 256)),
-        cb AS (SELECT t.j, s.code,
-            list_slice(s.embedding, t.j * 4 + 1, t.j * 4 + 4) AS ce
-          FROM seeds s CROSS JOIN range(0, 16) t(j)),
-        enc AS (SELECT vec_id, j, code FROM (
-          SELECT e.vec_id, cb.j, cb.code,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id, cb.j ORDER BY
-              list_reduce(list_transform(range(1, 5),
-                i -> (CAST(e.embedding[CAST(cb.j * 4 + i AS INT)] AS DOUBLE) - CAST(cb.ce[i] AS DOUBLE))
-                   * (CAST(e.embedding[CAST(cb.j * 4 + i AS INT)] AS DOUBLE) - CAST(cb.ce[i] AS DOUBLE))),
-                (x, y) -> x + y),
-              cb.code) AS rk
-          FROM embeddings e CROSS JOIN cb) WHERE rk = 1),
-        qn AS (SELECT query_id,
-            list_reduce(list_transform(range(1, len(qe) + 1),
-              i -> CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE)), (x, y) -> x + y) AS qnsq
-          FROM qv),
-        pj AS (SELECT enc.vec_id, qv.query_id, enc.j,
-            list_reduce(list_transform(range(1, 5),
-              i -> CAST(qv.qe[CAST(enc.j * 4 + i AS INT)] AS DOUBLE) * CAST(cb.ce[i] AS DOUBLE)),
-              (x, y) -> x + y) AS dotj,
-            list_reduce(list_transform(range(1, 5),
-              i -> CAST(cb.ce[i] AS DOUBLE) * CAST(cb.ce[i] AS DOUBLE)),
-              (x, y) -> x + y) AS nrmj
-          FROM enc JOIN cb ON cb.j = enc.j AND cb.code = enc.code
-          JOIN c50 ON c50.neighbor_id = enc.vec_id
-          JOIN qv ON qv.query_id = c50.query_id),
-        p0 AS (SELECT vec_id AS neighbor_id, query_id,
-            list_reduce(list(dotj ORDER BY j), (x, y) -> x + y) AS num,
-            list_reduce(list(nrmj ORDER BY j), (x, y) -> x + y) AS rn
-          FROM pj GROUP BY vec_id, query_id),
-        s20 AS (SELECT query_id, neighbor_id FROM (
-          SELECT p0.query_id, p0.neighbor_id, ROW_NUMBER() OVER (PARTITION BY p0.query_id
-            ORDER BY num / (sqrt(rn) * sqrt(qn.qnsq)) DESC, p0.neighbor_id) AS rk
-          FROM p0 JOIN qn ON qn.query_id = p0.query_id) WHERE rk <= 20),
-        x0 AS (SELECT s20.query_id, s20.neighbor_id,
-            list_reduce(list_transform(range(1, len(e.embedding) + 1),
-              i -> CAST(e.embedding[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> CAST(qv.qe[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)))
-            AS cosine
-          FROM s20 JOIN embeddings e ON e.vec_id = s20.neighbor_id
-          JOIN qv ON qv.query_id = s20.query_id)
-        SELECT query_id, neighbor_id, CAST(rk AS INT) AS rank FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM x0) WHERE rk <= 5
-        ORDER BY query_id, rank""")),
+      Some(s"""WITH $qvCte,
+        $signBitsCtes,
+        $hammingC50Cte,
+        ${codeSeedsCte("seeds", "embeddings", 256)},
+        ${codebookCte("cb", "seeds", 16, 4)},
+        ${encodeCte("enc", "embeddings", "e", "cb", 4)},
+        $qnCte,
+        $twoStageRerankCtes
+        ${rankedTopKSql("x0", 5)}""")),
 
     // ---- Streaming IVF two-stage retrieval ≡ batch (qst13): qs32's
     // deployable composite on the stream — the best-of-both serving
@@ -8367,103 +7079,19 @@ object DataOpsQueries {
             .orderBy(col("query_id"), col("rank"))
         }
       },
-      Some("""WITH qv AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 4),
-        smp AS (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 256),
-        thr AS (SELECT r.i,
-            list_reduce(list(CAST(s.embedding[r.i] AS DOUBLE) ORDER BY s.vec_id),
-              (x, y) -> x + y) / CAST(COUNT(*) AS DOUBLE) AS t
-          FROM smp s CROSS JOIN range(1, 65) r(i) GROUP BY r.i),
-        cbits AS (SELECT e.vec_id, CAST(SUM(
-            CASE WHEN CAST(e.embedding[thr.i] AS DOUBLE) > thr.t
-              THEN CASE WHEN thr.i = 64 THEN -9223372036854775807::BIGINT - 1::BIGINT
-                ELSE 1::BIGINT << CAST(thr.i - 1 AS INT) END
-              ELSE 0::BIGINT END) AS BIGINT) AS code
-          FROM embeddings e CROSS JOIN thr GROUP BY e.vec_id),
-        qbits AS (SELECT qv.query_id, CAST(SUM(
-            CASE WHEN CAST(qv.qe[thr.i] AS DOUBLE) > thr.t
-              THEN CASE WHEN thr.i = 64 THEN -9223372036854775807::BIGINT - 1::BIGINT
-                ELSE 1::BIGINT << CAST(thr.i - 1 AS INT) END
-              ELSE 0::BIGINT END) AS BIGINT) AS qcode
-          FROM qv CROSS JOIN thr GROUP BY qv.query_id),
-        cent AS (SELECT embedding AS ce,
-            ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell
-          FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 8)),
-        ca AS (SELECT vec_id, cell FROM (
-          SELECT e.vec_id, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-              list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> (CAST(e.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))
-                   * (CAST(e.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))), (x, y) -> x + y),
-              c.cell) AS rk
-          FROM embeddings e CROSS JOIN cent c) WHERE rk = 1),
-        qp AS (SELECT query_id, qe, cell FROM (
-          SELECT qv.query_id, qv.qe, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY qv.query_id ORDER BY
-              list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> (CAST(qv.qe[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))
-                   * (CAST(qv.qe[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))), (x, y) -> x + y),
-              c.cell) AS rk
-          FROM qv CROSS JOIN cent c) WHERE rk <= 4),
-        seeds AS (SELECT embedding, ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS code
-          FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 256)),
-        cb AS (SELECT t.j, s.code,
-            list_slice(s.embedding, t.j * 4 + 1, t.j * 4 + 4) AS ce
-          FROM seeds s CROSS JOIN range(0, 16) t(j)),
-        enc AS (SELECT vec_id, j, code FROM (
-          SELECT e.vec_id, cb.j, cb.code,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id, cb.j ORDER BY
-              list_reduce(list_transform(range(1, 5),
-                i -> (CAST(e.embedding[CAST(cb.j * 4 + i AS INT)] AS DOUBLE) - CAST(cb.ce[i] AS DOUBLE))
-                   * (CAST(e.embedding[CAST(cb.j * 4 + i AS INT)] AS DOUBLE) - CAST(cb.ce[i] AS DOUBLE))),
-                (x, y) -> x + y),
-              cb.code) AS rk
-          FROM embeddings e CROSS JOIN cb) WHERE rk = 1),
-        qn AS (SELECT query_id,
-            list_reduce(list_transform(range(1, len(qe) + 1),
-              i -> CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE)), (x, y) -> x + y) AS qnsq
-          FROM qv),
-        c50 AS (SELECT query_id, neighbor_id FROM (
-          SELECT qp.query_id, cb2.vec_id AS neighbor_id,
-            ROW_NUMBER() OVER (PARTITION BY qp.query_id
-              ORDER BY bit_count(xor(cb2.code, qb.qcode)), cb2.vec_id) AS rk
-          FROM cbits cb2 JOIN ca ON ca.vec_id = cb2.vec_id
-          JOIN qp ON qp.cell = ca.cell AND cb2.vec_id <> qp.query_id
-          JOIN qbits qb ON qb.query_id = qp.query_id) WHERE rk <= 50),
-        pj AS (SELECT enc.vec_id, qv.query_id, enc.j,
-            list_reduce(list_transform(range(1, 5),
-              i -> CAST(qv.qe[CAST(enc.j * 4 + i AS INT)] AS DOUBLE) * CAST(cb.ce[i] AS DOUBLE)),
-              (x, y) -> x + y) AS dotj,
-            list_reduce(list_transform(range(1, 5),
-              i -> CAST(cb.ce[i] AS DOUBLE) * CAST(cb.ce[i] AS DOUBLE)),
-              (x, y) -> x + y) AS nrmj
-          FROM enc JOIN cb ON cb.j = enc.j AND cb.code = enc.code
-          JOIN c50 ON c50.neighbor_id = enc.vec_id
-          JOIN qv ON qv.query_id = c50.query_id),
-        p0 AS (SELECT vec_id AS neighbor_id, query_id,
-            list_reduce(list(dotj ORDER BY j), (x, y) -> x + y) AS num,
-            list_reduce(list(nrmj ORDER BY j), (x, y) -> x + y) AS rn
-          FROM pj GROUP BY vec_id, query_id),
-        s20 AS (SELECT query_id, neighbor_id FROM (
-          SELECT p0.query_id, p0.neighbor_id, ROW_NUMBER() OVER (PARTITION BY p0.query_id
-            ORDER BY num / (sqrt(rn) * sqrt(qn.qnsq)) DESC, p0.neighbor_id) AS rk
-          FROM p0 JOIN qn ON qn.query_id = p0.query_id) WHERE rk <= 20),
-        x0 AS (SELECT s20.query_id, s20.neighbor_id,
-            list_reduce(list_transform(range(1, len(e.embedding) + 1),
-              i -> CAST(e.embedding[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> CAST(qv.qe[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)))
-            AS cosine
-          FROM s20 JOIN embeddings e ON e.vec_id = s20.neighbor_id
-          JOIN qv ON qv.query_id = s20.query_id),
-        f5 AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM x0) WHERE rk <= 5)
-  SELECT query_id, neighbor_id, CAST(rk AS INT) AS rank FROM (
-    SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-      ORDER BY cosine DESC, neighbor_id) AS rk FROM x0) WHERE rk <= 5
-  ORDER BY query_id, rank""")),
+      Some(s"""WITH $qvCte,
+        $signBitsCtes,
+        ${cellSeedsCte("cent", "embeddings", 8)},
+        ${cellCte("ca", "embeddings", "e", "cent")},
+        ${probeCte("qp", "cent", 4)},
+        ${codeSeedsCte("seeds", "embeddings", 256)},
+        ${codebookCte("cb", "seeds", 16, 4)},
+        ${encodeCte("enc", "embeddings", "e", "cb", 4)},
+        $qnCte,
+        $probedHammingC50Cte,
+        $twoStageRerankCtes,
+        ${topKCte("f5", "x0", 5)}
+  ${rankedTopKSql("x0", 5)}""")),
 
     // ---- Streamed token metering (qst14): the ingest-time budget
     // counter a corpus build runs continuously — documents ARRIVE as
@@ -8744,36 +7372,22 @@ object DataOpsQueries {
           .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
           .orderBy(col("query_id"), col("rank"))
       },
-      Some("""WITH q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 4),
+      Some(s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 4),
         sc AS (
           SELECT q.query_id, e.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(e.embedding) + 1),
-              i -> CAST(e.embedding[i] AS DOUBLE) * CAST(q.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(q.qe) + 1),
-                i -> CAST(q.qe[i] AS DOUBLE) * CAST(q.qe[i] AS DOUBLE)), (x, y) -> x + y)))
+            ${cosineSql("e.embedding", "q.qe")}
             AS cosine
           FROM embeddings e, q WHERE e.vec_id <> q.query_id),
-        r AS (SELECT query_id, neighbor_id, cosine,
-          ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-          FROM sc)
-        SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id, cosine
-        FROM r WHERE rank <= 5 ORDER BY query_id, rank""")),
+        $rankedCosineTail""")),
 
     // ---- embedding near-dup pairs above a cosine threshold ----
     QueryDef("qs2_cosine_pairs",
       (s, dir) => Similarity.brutePairs(t(s, dir, "embeddings"), "vec_id",
           "embedding", threshold = 0.45)
         .orderBy(col("id_a"), col("id_b")),
-      Some("""WITH p AS (
+      Some(s"""WITH p AS (
           SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-            list_reduce(list_transform(range(1, len(a.embedding) + 1),
-              i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(a.embedding) + 1),
-                i -> CAST(a.embedding[i] AS DOUBLE) * CAST(a.embedding[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(b.embedding) + 1),
-                i -> CAST(b.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)), (x, y) -> x + y)))
+            ${cosineSql("a.embedding", "b.embedding")}
             AS cosine
           FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id)
         SELECT id_a, id_b, cosine FROM p WHERE cosine >= 0.45

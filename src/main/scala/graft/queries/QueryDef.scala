@@ -12,6 +12,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - timestamps are emitted as epoch longs or formatted strings, never
   *    raw TIMESTAMP columns (parquet tz-annotation differences);
   *  - every query ends in a total ORDER BY mirrored in the oracle.
+  *
+  * Every oracle string is pinned by `OracleSqlPinSpec` (md5 of its
+  * whitespace-normalised SQL, one line per row in
+  * `src/test/resources/graft/oracle_sql.md5`), so moving SQL between
+  * modules or into [[OracleSql]] fragments provably changes no check.
+  * A deliberate oracle change re-pins by replacing that row's line
+  * with the new hash the failing spec prints, and names the row and
+  * the reason in CHANGES.md.
   */
 final case class QueryDef(
     name: String,
