@@ -483,8 +483,7 @@ object AdvancedQueries {
     QueryDef("qs4_lsh_topk",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
-        val q = e.filter(col("vec_id") < 4)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
+        val q = AnnRecall.queries(e)
         Similarity.lshTopK(e, q, "vec_id", "embedding", "query_id", "qe",
             k = 5, planes = 6)
           .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
@@ -508,8 +507,7 @@ object AdvancedQueries {
     QueryDef("qs5_lsh_multi_topk",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
-        val q = e.filter(col("vec_id") < 4)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
+        val q = AnnRecall.queries(e)
         Similarity.lshTopKMulti(e, q, "vec_id", "embedding", "query_id", "qe",
             k = 5, planes = 4, tables = 8)
           .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
@@ -616,12 +614,8 @@ object AdvancedQueries {
     QueryDef("qs8_ann_recall",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
-        val q = e.filter(col("vec_id") < 4)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-        // result-sized (queries × k); every arm joins against it
-        val brute = Similarity.bruteTopK(e, q,
-            "vec_id", "embedding", "query_id", "qe", k = 5)
-          .persist(StorageLevel.MEMORY_AND_DISK)
+        val q = AnnRecall.queries(e)
+        val brute = AnnRecall.brute(e, q)
         val model = Ivf.fit(e, "vec_id", "embedding", k = 8)
         val seeds = Ivf.fit(e, "vec_id", "embedding", k = 8, iters = 0)
         val arms = Seq(
@@ -635,11 +629,8 @@ object AdvancedQueries {
           "lsh_p6" -> Similarity.lshTopK(e, q, "vec_id", "embedding",
             "query_id", "qe", k = 5, planes = 6))
         arms.map { case (m, ann) =>
-          Similarity.recallAtK(ann, brute, k = 5).withColumn("method", lit(m))
+          AnnRecall.recall(ann, brute).select(lit(m).as("method"), col("*"))
         }.reduce(_ unionByName _)
-          .select(col("method"), col("query_id"),
-            col("n_hit").cast("int").as("n_hit"),
-            col("n_exact").cast("int").as("n_exact"), col("recall"))
           .orderBy(col("method"), col("query_id"))
       },
       Some {
@@ -721,20 +712,12 @@ object AdvancedQueries {
     QueryDef("qs11_ann_recall_lloyd",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
-        val q = e.filter(col("vec_id") < 4)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-        val brute = Similarity.bruteTopK(e, q,
-            "vec_id", "embedding", "query_id", "qe", k = 5)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val lloyd = Ivf.fit(e, "vec_id", "embedding", k = 8, iters = 1)
-        val ann = Ivf.topK(e, q, "vec_id", "embedding", "query_id", "qe",
-          lloyd, k = 5, nprobe = 2)
-        Similarity.recallAtK(ann, brute, k = 5)
-          .withColumn("method", lit("ivf_lloyd1_probe2"))
-          .select(col("method"), col("query_id"),
-            col("n_hit").cast("int").as("n_hit"),
-            col("n_exact").cast("int").as("n_exact"), col("recall"))
-          .orderBy(col("query_id"))
+        val q = AnnRecall.queries(e)
+        AnnRecall(e, q) {
+          val lloyd = Ivf.fit(e, "vec_id", "embedding", k = 8, iters = 1)
+          Ivf.topK(e, q, "vec_id", "embedding", "query_id", "qe",
+            lloyd, k = 5, nprobe = 2)
+        }.select(lit("ivf_lloyd1_probe2").as("method"), col("*"))
       },
       Some {
         s"""WITH $qvCte,
@@ -776,20 +759,12 @@ object AdvancedQueries {
     QueryDef("qs14_ann_recall_lloyd2",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
-        val q = e.filter(col("vec_id") < 4)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-        val brute = Similarity.bruteTopK(e, q,
-            "vec_id", "embedding", "query_id", "qe", k = 5)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val lloyd = Ivf.fit(e, "vec_id", "embedding", k = 8, iters = 2)
-        val ann = Ivf.topK(e, q, "vec_id", "embedding", "query_id", "qe",
-          lloyd, k = 5, nprobe = 2)
-        Similarity.recallAtK(ann, brute, k = 5)
-          .withColumn("method", lit("ivf_lloyd2_probe2"))
-          .select(col("method"), col("query_id"),
-            col("n_hit").cast("int").as("n_hit"),
-            col("n_exact").cast("int").as("n_exact"), col("recall"))
-          .orderBy(col("query_id"))
+        val q = AnnRecall.queries(e)
+        AnnRecall(e, q) {
+          val lloyd = Ivf.fit(e, "vec_id", "embedding", k = 8, iters = 2)
+          Ivf.topK(e, q, "vec_id", "embedding", "query_id", "qe",
+            lloyd, k = 5, nprobe = 2)
+        }.select(lit("ivf_lloyd2_probe2").as("method"), col("*"))
       },
       Some {
         s"""WITH $qvCte,
@@ -931,8 +906,7 @@ object AdvancedQueries {
           .join(sem, Seq("vec_id"), "left")
           .filter(coalesce(col("is_canonical"), lit(true)) && col("b_keep"))
           .select(col("vec_id"), col("embedding"))
-        val q = e.filter(col("vec_id") < 4)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
+        val q = AnnRecall.queries(e)
         val pq = DataOpsQueries.awaitFit(fPq)
         val cells = DataOpsQueries.awaitFit(fCells)
         Ivf.topKAdc(released, q, "vec_id", "embedding",

@@ -2178,20 +2178,14 @@ object DataOpsQueries {
     QueryDef("qs10_int8_ann",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
-        val q = e.filter(col("vec_id") < 4)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-        val brute = Similarity.bruteTopK(e, q,
+        val q = AnnRecall.queries(e)
+        AnnRecall(e, q) {
+          val corpusI8 = e.select(col("vec_id"),
+            transform(Similarity.int8Quantize(col("embedding")),
+              c => c.cast("float")).as("embedding"))
+          Similarity.bruteTopK(corpusI8, q,
             "vec_id", "embedding", "query_id", "qe", k = 5)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val corpusI8 = e.select(col("vec_id"),
-          transform(Similarity.int8Quantize(col("embedding")),
-            c => c.cast("float")).as("embedding"))
-        val annI8 = Similarity.bruteTopK(corpusI8, q,
-          "vec_id", "embedding", "query_id", "qe", k = 5)
-        Similarity.recallAtK(annI8, brute, k = 5)
-          .select(col("query_id"), col("n_hit").cast("int").as("n_hit"),
-            col("n_exact").cast("int").as("n_exact"), col("recall"))
-          .orderBy(col("query_id"))
+        }
       },
       Some(s"""WITH $qvCte,
         ${bruteCtes("embeddings", "e", 5)},
@@ -2233,22 +2227,16 @@ object DataOpsQueries {
     QueryDef("qs12_int8_ivf_ann",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
-        val q = e.filter(col("vec_id") < 4)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-        val brute = Similarity.bruteTopK(e, q,
-            "vec_id", "embedding", "query_id", "qe", k = 5)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        // int8 codes as float: every value in [-127,127] is exact
-        val corpusI8 = e.select(col("vec_id"),
-          transform(Similarity.int8Quantize(col("embedding")),
-            c => c.cast("float")).as("embedding"))
-        val seeds = Ivf.fit(corpusI8, "vec_id", "embedding", k = 8, iters = 0)
-        val ann = Ivf.topK(corpusI8, q, "vec_id", "embedding",
-          "query_id", "qe", seeds, k = 5, nprobe = 2)
-        Similarity.recallAtK(ann, brute, k = 5)
-          .select(col("query_id"), col("n_hit").cast("int").as("n_hit"),
-            col("n_exact").cast("int").as("n_exact"), col("recall"))
-          .orderBy(col("query_id"))
+        val q = AnnRecall.queries(e)
+        AnnRecall(e, q) {
+          // int8 codes as float: every value in [-127,127] is exact
+          val corpusI8 = e.select(col("vec_id"),
+            transform(Similarity.int8Quantize(col("embedding")),
+              c => c.cast("float")).as("embedding"))
+          val seeds = Ivf.fit(corpusI8, "vec_id", "embedding", k = 8, iters = 0)
+          Ivf.topK(corpusI8, q, "vec_id", "embedding",
+            "query_id", "qe", seeds, k = 5, nprobe = 2)
+        }
       },
       Some(s"""WITH $qvCte,
         ${bruteCtes("embeddings", "e", 5)},
@@ -2290,21 +2278,15 @@ object DataOpsQueries {
     QueryDef("qs13_int8_ivf_float_cells",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
-        val q = e.filter(col("vec_id") < 4)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-        val brute = Similarity.bruteTopK(e, q,
-            "vec_id", "embedding", "query_id", "qe", k = 5)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val withCodes = e.select(col("vec_id"), col("embedding"),
-          transform(Similarity.int8Quantize(col("embedding")),
-            c => c.cast("float")).as("codes"))
-        val seeds = Ivf.fit(e, "vec_id", "embedding", k = 8, iters = 0)
-        val ann = Ivf.topKOn(withCodes, q, "vec_id", "embedding", "codes",
-          "query_id", "qe", seeds, k = 5, nprobe = 2)
-        Similarity.recallAtK(ann, brute, k = 5)
-          .select(col("query_id"), col("n_hit").cast("int").as("n_hit"),
-            col("n_exact").cast("int").as("n_exact"), col("recall"))
-          .orderBy(col("query_id"))
+        val q = AnnRecall.queries(e)
+        AnnRecall(e, q) {
+          val withCodes = e.select(col("vec_id"), col("embedding"),
+            transform(Similarity.int8Quantize(col("embedding")),
+              c => c.cast("float")).as("codes"))
+          val seeds = Ivf.fit(e, "vec_id", "embedding", k = 8, iters = 0)
+          Ivf.topKOn(withCodes, q, "vec_id", "embedding", "codes",
+            "query_id", "qe", seeds, k = 5, nprobe = 2)
+        }
       },
       Some(s"""WITH $qvCte,
         ${bruteCtes("embeddings", "e", 5)},
@@ -2344,19 +2326,13 @@ object DataOpsQueries {
     QueryDef("qs17_pq_ann",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
-        val q = e.filter(col("vec_id") < 4)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-        val brute = Similarity.bruteTopK(e, q,
+        val q = AnnRecall.queries(e)
+        AnnRecall(e, q) {
+          val model = graft.sim.Pq.fit(e, "vec_id", "embedding", m = 4, k = 8)
+          val recon = graft.sim.Pq.reconstructed(e, "vec_id", "embedding", model)
+          Similarity.bruteTopK(recon, q,
             "vec_id", "embedding", "query_id", "qe", k = 5)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val model = graft.sim.Pq.fit(e, "vec_id", "embedding", m = 4, k = 8)
-        val recon = graft.sim.Pq.reconstructed(e, "vec_id", "embedding", model)
-        val annPq = Similarity.bruteTopK(recon, q,
-          "vec_id", "embedding", "query_id", "qe", k = 5)
-        Similarity.recallAtK(annPq, brute, k = 5)
-          .select(col("query_id"), col("n_hit").cast("int").as("n_hit"),
-            col("n_exact").cast("int").as("n_exact"), col("recall"))
-          .orderBy(col("query_id"))
+        }
       },
       Some(s"""WITH $qvCte,
         ${bruteCtes("embeddings", "e", 5)},
@@ -2388,21 +2364,15 @@ object DataOpsQueries {
     QueryDef("qs18_ivfpq_ann",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
-        val q = e.filter(col("vec_id") < 4)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-        val brute = Similarity.bruteTopK(e, q,
-            "vec_id", "embedding", "query_id", "qe", k = 5)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val pq = graft.sim.Pq.fit(e, "vec_id", "embedding", m = 4, k = 8)
-        val withRecon = e.select(col("vec_id"), col("embedding"),
-          graft.sim.Pq.reconstruct(col("embedding"), pq).as("recon"))
-        val seeds = Ivf.fit(e, "vec_id", "embedding", k = 8, iters = 0)
-        val ann = Ivf.topKOn(withRecon, q, "vec_id", "embedding", "recon",
-          "query_id", "qe", seeds, k = 5, nprobe = 2)
-        Similarity.recallAtK(ann, brute, k = 5)
-          .select(col("query_id"), col("n_hit").cast("int").as("n_hit"),
-            col("n_exact").cast("int").as("n_exact"), col("recall"))
-          .orderBy(col("query_id"))
+        val q = AnnRecall.queries(e)
+        AnnRecall(e, q) {
+          val pq = graft.sim.Pq.fit(e, "vec_id", "embedding", m = 4, k = 8)
+          val withRecon = e.select(col("vec_id"), col("embedding"),
+            graft.sim.Pq.reconstruct(col("embedding"), pq).as("recon"))
+          val seeds = Ivf.fit(e, "vec_id", "embedding", k = 8, iters = 0)
+          Ivf.topKOn(withRecon, q, "vec_id", "embedding", "recon",
+            "query_id", "qe", seeds, k = 5, nprobe = 2)
+        }
       },
       Some(s"""WITH $qvCte,
         ${bruteCtes("embeddings", "e", 5)},
@@ -2435,20 +2405,14 @@ object DataOpsQueries {
     QueryDef("qs19_pq_lloyd",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
-        val q = e.filter(col("vec_id") < 4)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-        val brute = Similarity.bruteTopK(e, q,
+        val q = AnnRecall.queries(e)
+        AnnRecall(e, q) {
+          val model = graft.sim.Pq.fitLloyd(e, "vec_id", "embedding",
+            m = 4, k = 8, iters = 1)
+          val recon = graft.sim.Pq.reconstructed(e, "vec_id", "embedding", model)
+          Similarity.bruteTopK(recon, q,
             "vec_id", "embedding", "query_id", "qe", k = 5)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val model = graft.sim.Pq.fitLloyd(e, "vec_id", "embedding",
-          m = 4, k = 8, iters = 1)
-        val recon = graft.sim.Pq.reconstructed(e, "vec_id", "embedding", model)
-        val annPq = Similarity.bruteTopK(recon, q,
-          "vec_id", "embedding", "query_id", "qe", k = 5)
-        Similarity.recallAtK(annPq, brute, k = 5)
-          .select(col("query_id"), col("n_hit").cast("int").as("n_hit"),
-            col("n_exact").cast("int").as("n_exact"), col("recall"))
-          .orderBy(col("query_id"))
+        }
       },
       Some(pqLloydOracleSql)),
 
@@ -2463,19 +2427,13 @@ object DataOpsQueries {
     QueryDef("qs20_pq_k64",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
-        val q = e.filter(col("vec_id") < 4)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-        val brute = Similarity.bruteTopK(e, q,
+        val q = AnnRecall.queries(e)
+        AnnRecall(e, q) {
+          val model = graft.sim.Pq.fit(e, "vec_id", "embedding", m = 4, k = 64)
+          val recon = graft.sim.Pq.reconstructed(e, "vec_id", "embedding", model)
+          Similarity.bruteTopK(recon, q,
             "vec_id", "embedding", "query_id", "qe", k = 5)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val model = graft.sim.Pq.fit(e, "vec_id", "embedding", m = 4, k = 64)
-        val recon = graft.sim.Pq.reconstructed(e, "vec_id", "embedding", model)
-        val annPq = Similarity.bruteTopK(recon, q,
-          "vec_id", "embedding", "query_id", "qe", k = 5)
-        Similarity.recallAtK(annPq, brute, k = 5)
-          .select(col("query_id"), col("n_hit").cast("int").as("n_hit"),
-            col("n_exact").cast("int").as("n_exact"), col("recall"))
-          .orderBy(col("query_id"))
+        }
       },
       Some(s"""WITH $qvCte,
         ${bruteCtes("embeddings", "e", 5)},
@@ -2504,19 +2462,13 @@ object DataOpsQueries {
     QueryDef("qs21_pq_128bit",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
-        val q = e.filter(col("vec_id") < 4)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-        val brute = Similarity.bruteTopK(e, q,
+        val q = AnnRecall.queries(e)
+        AnnRecall(e, q) {
+          val model = graft.sim.Pq.fit(e, "vec_id", "embedding", m = 16, k = 256)
+          val recon = graft.sim.Pq.reconstructed(e, "vec_id", "embedding", model)
+          Similarity.bruteTopK(recon, q,
             "vec_id", "embedding", "query_id", "qe", k = 5)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val model = graft.sim.Pq.fit(e, "vec_id", "embedding", m = 16, k = 256)
-        val recon = graft.sim.Pq.reconstructed(e, "vec_id", "embedding", model)
-        val annPq = Similarity.bruteTopK(recon, q,
-          "vec_id", "embedding", "query_id", "qe", k = 5)
-        Similarity.recallAtK(annPq, brute, k = 5)
-          .select(col("query_id"), col("n_hit").cast("int").as("n_hit"),
-            col("n_exact").cast("int").as("n_exact"), col("recall"))
-          .orderBy(col("query_id"))
+        }
       },
       Some(s"""WITH $qvCte,
         ${bruteCtes("embeddings", "e", 5)},
@@ -2552,21 +2504,15 @@ object DataOpsQueries {
     QueryDef("qs22_ivfpq_serving",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
-        val q = e.filter(col("vec_id") < 4)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-        val brute = Similarity.bruteTopK(e, q,
-            "vec_id", "embedding", "query_id", "qe", k = 5)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val pq = graft.sim.Pq.fit(e, "vec_id", "embedding", m = 16, k = 256)
-        val withRecon = e.select(col("vec_id"), col("embedding"),
-          graft.sim.Pq.reconstruct(col("embedding"), pq).as("recon"))
-        val cells = Ivf.fit(e, "vec_id", "embedding", k = 8, iters = 0)
-        val ann = Ivf.topKOn(withRecon, q, "vec_id", "embedding", "recon",
-          "query_id", "qe", cells, k = 5, nprobe = 4)
-        Similarity.recallAtK(ann, brute, k = 5)
-          .select(col("query_id"), col("n_hit").cast("int").as("n_hit"),
-            col("n_exact").cast("int").as("n_exact"), col("recall"))
-          .orderBy(col("query_id"))
+        val q = AnnRecall.queries(e)
+        AnnRecall(e, q) {
+          val pq = graft.sim.Pq.fit(e, "vec_id", "embedding", m = 16, k = 256)
+          val withRecon = e.select(col("vec_id"), col("embedding"),
+            graft.sim.Pq.reconstruct(col("embedding"), pq).as("recon"))
+          val cells = Ivf.fit(e, "vec_id", "embedding", k = 8, iters = 0)
+          Ivf.topKOn(withRecon, q, "vec_id", "embedding", "recon",
+            "query_id", "qe", cells, k = 5, nprobe = 4)
+        }
       },
       Some(s"""WITH $qvCte,
         ${bruteCtes("embeddings", "e", 5)},
@@ -2600,30 +2546,24 @@ object DataOpsQueries {
     QueryDef("qs23_pq_adc",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
-        val q = e.filter(col("vec_id") < 4)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-        val brute = Similarity.bruteTopK(e, q,
-            "vec_id", "embedding", "query_id", "qe", k = 5)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val pq = graft.sim.Pq.fit(e, "vec_id", "embedding", m = 16, k = 256)
-        val qLut = graft.sim.Pq.withAdcTables(q, "query_id", "qe", pq)
-          .select(col("query_id"), col("adc_lut"), col("adc_qnsq"))
-        val codes = graft.ops.Partitioning.spread(e)
-          .select(col("vec_id"),
-            graft.sim.Pq.codes(col("embedding"), pq).as("codes"))
-        val scored = codes.crossJoin(broadcast(qLut))
-          .filter(col("vec_id") =!= col("query_id"))
-          .select(col("query_id"), col("vec_id").as("neighbor_id"),
-            graft.sim.Pq.adcCosine(col("codes"), col("adc_lut"),
-              col("adc_qnsq"), pq).as("cosine"))
-        val w = Window.partitionBy(col("query_id"))
-          .orderBy(col("cosine").desc, col("neighbor_id"))
-        val ann = scored.withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= 5)
-        Similarity.recallAtK(ann, brute, k = 5)
-          .select(col("query_id"), col("n_hit").cast("int").as("n_hit"),
-            col("n_exact").cast("int").as("n_exact"), col("recall"))
-          .orderBy(col("query_id"))
+        val q = AnnRecall.queries(e)
+        AnnRecall(e, q) {
+          val pq = graft.sim.Pq.fit(e, "vec_id", "embedding", m = 16, k = 256)
+          val qLut = graft.sim.Pq.withAdcTables(q, "query_id", "qe", pq)
+            .select(col("query_id"), col("adc_lut"), col("adc_qnsq"))
+          val codes = graft.ops.Partitioning.spread(e)
+            .select(col("vec_id"),
+              graft.sim.Pq.codes(col("embedding"), pq).as("codes"))
+          val scored = codes.crossJoin(broadcast(qLut))
+            .filter(col("vec_id") =!= col("query_id"))
+            .select(col("query_id"), col("vec_id").as("neighbor_id"),
+              graft.sim.Pq.adcCosine(col("codes"), col("adc_lut"),
+                col("adc_qnsq"), pq).as("cosine"))
+          val w = Window.partitionBy(col("query_id"))
+            .orderBy(col("cosine").desc, col("neighbor_id"))
+          scored.withColumn("rank", row_number().over(w))
+            .filter(col("rank") <= 5)
+        }
       },
       Some(s"""WITH $qvCte,
         ${bruteCtes("embeddings", "e", 5)},
@@ -2650,19 +2590,13 @@ object DataOpsQueries {
     QueryDef("qs24_ivfpq_adc",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
-        val q = e.filter(col("vec_id") < 4)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-        val brute = Similarity.bruteTopK(e, q,
-            "vec_id", "embedding", "query_id", "qe", k = 5)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val pq = graft.sim.Pq.fit(e, "vec_id", "embedding", m = 16, k = 256)
-        val cells = Ivf.fit(e, "vec_id", "embedding", k = 8, iters = 0)
-        val ann = Ivf.topKAdc(e, q, "vec_id", "embedding",
-          "query_id", "qe", cells, pq, k = 5, nprobe = 4)
-        Similarity.recallAtK(ann, brute, k = 5)
-          .select(col("query_id"), col("n_hit").cast("int").as("n_hit"),
-            col("n_exact").cast("int").as("n_exact"), col("recall"))
-          .orderBy(col("query_id"))
+        val q = AnnRecall.queries(e)
+        AnnRecall(e, q) {
+          val pq = graft.sim.Pq.fit(e, "vec_id", "embedding", m = 16, k = 256)
+          val cells = Ivf.fit(e, "vec_id", "embedding", k = 8, iters = 0)
+          Ivf.topKAdc(e, q, "vec_id", "embedding",
+            "query_id", "qe", cells, pq, k = 5, nprobe = 4)
+        }
       },
       Some(s"""WITH $qvCte,
         ${bruteCtes("embeddings", "e", 5)},
@@ -2702,11 +2636,8 @@ object DataOpsQueries {
     QueryDef("qs26_binary_hamming",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
-        val q = e.filter(col("vec_id") < 4)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-        val brute = Similarity.bruteTopK(e, q,
-            "vec_id", "embedding", "query_id", "qe", k = 5)
-          .persist(StorageLevel.MEMORY_AND_DISK)
+        val q = AnnRecall.queries(e)
+        val brute = AnnRecall.brute(e, q)
         val thr = Similarity.signThresholds(e, "vec_id", "embedding")
         val cb = graft.ops.Partitioning.spread(e)
           .select(col("vec_id"),
@@ -2721,8 +2652,7 @@ object DataOpsQueries {
           .orderBy(col("dist"), col("neighbor_id"))
         val ranked = scored.withColumn("rank", row_number().over(w))
           .persist(StorageLevel.MEMORY_AND_DISK)
-        val r5 = Similarity.recallAtK(ranked.filter(col("rank") <= 5),
-          brute, k = 5)
+        val r5 = AnnRecall.recall(ranked.filter(col("rank") <= 5), brute)
         val in50 = brute.filter(col("rank") <= 5)
           .select(col("query_id"), col("neighbor_id"))
           .join(ranked.filter(col("rank") <= 50)
@@ -2730,8 +2660,7 @@ object DataOpsQueries {
             Seq("query_id", "neighbor_id"))
           .groupBy(col("query_id")).agg(count(lit(1)).as("n_in50"))
         r5.join(in50, Seq("query_id"), "left")
-          .select(col("query_id"), col("n_hit").cast("int").as("n_hit"),
-            col("n_exact").cast("int").as("n_exact"), col("recall"),
+          .select(col("query_id"), col("n_hit"), col("n_exact"), col("recall"),
             coalesce(col("n_in50"), lit(0L)).cast("int").as("n_in50"),
             (coalesce(col("n_in50"), lit(0L)).cast("double") /
               col("n_exact")).as("recall50"))
@@ -2784,24 +2713,18 @@ object DataOpsQueries {
     QueryDef("qs25_ivfpq_residual",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
-        val q = e.filter(col("vec_id") < 4)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-        val brute = Similarity.bruteTopK(e, q,
-            "vec_id", "embedding", "query_id", "qe", k = 5)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val cells = Ivf.fit(e, "vec_id", "embedding", k = 8, iters = 0)
-        val wr = Ivf.withResiduals(e, "vec_id", "embedding", cells)
-        val pq = graft.sim.Pq.fit(wr, "vec_id", "resid", m = 16, k = 256)
-        val recon = wr.select(col("vec_id"), col("embedding"),
-          zip_with(element_at(Ivf.centroidsLit(cells), col("cell") + 1),
-            graft.sim.Pq.reconstruct(col("resid"), pq),
-            (c, r) => c + r.cast("double")).as("recon"))
-        val ann = Ivf.topKOn(recon, q, "vec_id", "embedding", "recon",
-          "query_id", "qe", cells, k = 5, nprobe = 4)
-        Similarity.recallAtK(ann, brute, k = 5)
-          .select(col("query_id"), col("n_hit").cast("int").as("n_hit"),
-            col("n_exact").cast("int").as("n_exact"), col("recall"))
-          .orderBy(col("query_id"))
+        val q = AnnRecall.queries(e)
+        AnnRecall(e, q) {
+          val cells = Ivf.fit(e, "vec_id", "embedding", k = 8, iters = 0)
+          val wr = Ivf.withResiduals(e, "vec_id", "embedding", cells)
+          val pq = graft.sim.Pq.fit(wr, "vec_id", "resid", m = 16, k = 256)
+          val recon = wr.select(col("vec_id"), col("embedding"),
+            zip_with(element_at(Ivf.centroidsLit(cells), col("cell") + 1),
+              graft.sim.Pq.reconstruct(col("resid"), pq),
+              (c, r) => c + r.cast("double")).as("recon"))
+          Ivf.topKOn(recon, q, "vec_id", "embedding", "recon",
+            "query_id", "qe", cells, k = 5, nprobe = 4)
+        }
       },
       Some(s"""WITH $qvCte,
         ${bruteCtes("embeddings", "e", 5)},
@@ -2870,25 +2793,19 @@ object DataOpsQueries {
         val e = t(s, dir, "embeddings")
         val old = e.filter(col("vec_id") % 8 =!= 0)
         val batch = e.filter(col("vec_id") % 8 === 0)
-        val q = e.filter(col("vec_id") < 4)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-        val brute = Similarity.bruteTopK(e, q,
-            "vec_id", "embedding", "query_id", "qe", k = 5)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val pq = graft.sim.Pq.fit(old, "vec_id", "embedding", m = 16, k = 256)
-        val cells = Ivf.fit(old, "vec_id", "embedding", k = 8, iters = 0)
-        def enc(df: DataFrame): DataFrame =
-          Ivf.assign(df, "vec_id", "embedding", cells)
-            .select(col("vec_id"),
-              graft.sim.Pq.codes(col("embedding"), pq).as("codes"),
-              col("cell"))
-        val index = enc(old).unionByName(enc(batch))
-        val ann = Ivf.topKAdcOnIndex(index, q, "vec_id",
-          "query_id", "qe", cells, pq, k = 5, nprobe = 4)
-        Similarity.recallAtK(ann, brute, k = 5)
-          .select(col("query_id"), col("n_hit").cast("int").as("n_hit"),
-            col("n_exact").cast("int").as("n_exact"), col("recall"))
-          .orderBy(col("query_id"))
+        val q = AnnRecall.queries(e)
+        AnnRecall(e, q) {
+          val pq = graft.sim.Pq.fit(old, "vec_id", "embedding", m = 16, k = 256)
+          val cells = Ivf.fit(old, "vec_id", "embedding", k = 8, iters = 0)
+          def enc(df: DataFrame): DataFrame =
+            Ivf.assign(df, "vec_id", "embedding", cells)
+              .select(col("vec_id"),
+                graft.sim.Pq.codes(col("embedding"), pq).as("codes"),
+                col("cell"))
+          val index = enc(old).unionByName(enc(batch))
+          Ivf.topKAdcOnIndex(index, q, "vec_id",
+            "query_id", "qe", cells, pq, k = 5, nprobe = 4)
+        }
       },
       Some(s"""WITH $qvCte,
         ${bruteCtes("embeddings", "e", 5)},
@@ -2922,21 +2839,15 @@ object DataOpsQueries {
     QueryDef("qs28_sq8_ann",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
-        val q = e.filter(col("vec_id") < 4)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-        val brute = Similarity.bruteTopK(e, q,
-            "vec_id", "embedding", "query_id", "qe", k = 5)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val (mn, mx) = Similarity.sq8Params(e, "vec_id", "embedding")
-        val withRecon = e.select(col("vec_id"), col("embedding"),
-          Similarity.sq8Reconstruct(col("embedding"), mn, mx).as("recon"))
-        val cells = Ivf.fit(e, "vec_id", "embedding", k = 8, iters = 0)
-        val ann = Ivf.topKOn(withRecon, q, "vec_id", "embedding", "recon",
-          "query_id", "qe", cells, k = 5, nprobe = 4)
-        Similarity.recallAtK(ann, brute, k = 5)
-          .select(col("query_id"), col("n_hit").cast("int").as("n_hit"),
-            col("n_exact").cast("int").as("n_exact"), col("recall"))
-          .orderBy(col("query_id"))
+        val q = AnnRecall.queries(e)
+        AnnRecall(e, q) {
+          val (mn, mx) = Similarity.sq8Params(e, "vec_id", "embedding")
+          val withRecon = e.select(col("vec_id"), col("embedding"),
+            Similarity.sq8Reconstruct(col("embedding"), mn, mx).as("recon"))
+          val cells = Ivf.fit(e, "vec_id", "embedding", k = 8, iters = 0)
+          Ivf.topKOn(withRecon, q, "vec_id", "embedding", "recon",
+            "query_id", "qe", cells, k = 5, nprobe = 4)
+        }
       },
       Some(s"""WITH $qvCte,
         ${bruteCtes("embeddings", "e", 5)},
@@ -2991,20 +2902,14 @@ object DataOpsQueries {
     QueryDef("qs29_two_stage",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
-        val q = e.filter(col("vec_id") < 4)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-        val brute = Similarity.bruteTopK(e, q,
-            "vec_id", "embedding", "query_id", "qe", k = 5)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val thr = Similarity.signThresholds(e, "vec_id", "embedding")
-        val pq = graft.sim.Pq.fit(e, "vec_id", "embedding", m = 16, k = 256)
-        val ann = graft.sim.Serving.twoStageTopK(e, q,
-          "vec_id", "embedding", "query_id", "qe", thr, pq,
-          k = 5, coarseK = 50, shortK = 20)
-        Similarity.recallAtK(ann, brute, k = 5)
-          .select(col("query_id"), col("n_hit").cast("int").as("n_hit"),
-            col("n_exact").cast("int").as("n_exact"), col("recall"))
-          .orderBy(col("query_id"))
+        val q = AnnRecall.queries(e)
+        AnnRecall(e, q) {
+          val thr = Similarity.signThresholds(e, "vec_id", "embedding")
+          val pq = graft.sim.Pq.fit(e, "vec_id", "embedding", m = 16, k = 256)
+          graft.sim.Serving.twoStageTopK(e, q,
+            "vec_id", "embedding", "query_id", "qe", thr, pq,
+            k = 5, coarseK = 50, shortK = 20)
+        }
       },
       Some(s"""WITH $qvCte,
         ${bruteCtes("embeddings", "e", 5)},
@@ -3036,21 +2941,15 @@ object DataOpsQueries {
     QueryDef("qs32_two_stage_ivf",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
-        val q = e.filter(col("vec_id") < 4)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-        val brute = Similarity.bruteTopK(e, q,
-            "vec_id", "embedding", "query_id", "qe", k = 5)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val thr = Similarity.signThresholds(e, "vec_id", "embedding")
-        val pq = graft.sim.Pq.fit(e, "vec_id", "embedding", m = 16, k = 256)
-        val cells = Ivf.fit(e, "vec_id", "embedding", k = 8, iters = 0)
-        val ann = graft.sim.Serving.twoStageTopKIvf(e, q,
-          "vec_id", "embedding", "query_id", "qe", cells, thr, pq,
-          k = 5, coarseK = 50, shortK = 20, nprobe = 4)
-        Similarity.recallAtK(ann, brute, k = 5)
-          .select(col("query_id"), col("n_hit").cast("int").as("n_hit"),
-            col("n_exact").cast("int").as("n_exact"), col("recall"))
-          .orderBy(col("query_id"))
+        val q = AnnRecall.queries(e)
+        AnnRecall(e, q) {
+          val thr = Similarity.signThresholds(e, "vec_id", "embedding")
+          val pq = graft.sim.Pq.fit(e, "vec_id", "embedding", m = 16, k = 256)
+          val cells = Ivf.fit(e, "vec_id", "embedding", k = 8, iters = 0)
+          graft.sim.Serving.twoStageTopKIvf(e, q,
+            "vec_id", "embedding", "query_id", "qe", cells, thr, pq,
+            k = 5, coarseK = 50, shortK = 20, nprobe = 4)
+        }
       },
       Some(s"""WITH $qvCte,
         ${bruteCtes("embeddings", "e", 5)},
@@ -3087,12 +2986,9 @@ object DataOpsQueries {
         val tmp = java.nio.file.Files.createTempDirectory("qs33_index")
         try {
           val e = t(s, dir, "embeddings")
-          val q = e.filter(col("vec_id") < 4)
-            .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
+          val q = AnnRecall.queries(e)
           val live = e.filter(col("vec_id") % 8 =!= 3)
-          val brute = Similarity.bruteTopK(live, q,
-              "vec_id", "embedding", "query_id", "qe", k = 5)
-            .persist(StorageLevel.MEMORY_AND_DISK)
+          val brute = AnnRecall.brute(live, q)
           // the brute reference ranking's only consumer is the final
           // recall join, but nothing else depends on it — materialize
           // it from a pool thread so its stages back-fill the index
@@ -3126,10 +3022,7 @@ object DataOpsQueries {
           require(ann.filter(col("neighbor_id") % 8 === 3).isEmpty,
             "two-stage serving must never return a tombstoned id")
           awaitFit(fBrute)
-          val res = Similarity.recallAtK(ann, brute, k = 5)
-            .select(col("query_id"), col("n_hit").cast("int").as("n_hit"),
-              col("n_exact").cast("int").as("n_exact"), col("recall"))
-            .orderBy(col("query_id"))
+          val res = AnnRecall.recall(ann, brute).orderBy(col("query_id"))
           import scala.jdk.CollectionConverters._
           s.createDataFrame(res.collect().toSeq.asJava, res.schema)
         } finally {
@@ -3321,9 +3214,7 @@ object DataOpsQueries {
         val q = drifted.filter(col("vec_id") < 4 ||
             (col("vec_id") % 8 === 0 && col("vec_id") < 32))
           .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-        val brute = Similarity.bruteTopK(drifted, q,
-            "vec_id", "embedding", "query_id", "qe", k = 5)
-          .persist(StorageLevel.MEMORY_AND_DISK)
+        val brute = AnnRecall.brute(drifted, q)
         def enc(df: DataFrame, cells: Ivf.Model,
             pq: graft.sim.Pq.Model): DataFrame =
           Ivf.assign(df, "vec_id", "embedding", cells)
@@ -3350,10 +3241,10 @@ object DataOpsQueries {
         val pqNew = awaitFit(fPqNew)
         val annRefit = Ivf.topKAdcOnIndex(enc(drifted, cellsNew, pqNew),
           q, "vec_id", "query_id", "qe", cellsNew, pqNew, k = 5, nprobe = 4)
-        val rf = Similarity.recallAtK(annFrozen, brute, k = 5)
+        val rf = AnnRecall.recall(annFrozen, brute)
           .select(col("query_id"), col("n_hit").as("nf"),
             col("n_exact"), col("recall").as("recall_frozen"))
-        val rr = Similarity.recallAtK(annRefit, brute, k = 5)
+        val rr = AnnRecall.recall(annRefit, brute)
           .select(col("query_id"), col("n_hit").as("nr"),
             col("recall").as("recall_refit"))
         rf.join(rr, Seq("query_id"))
@@ -3415,9 +3306,7 @@ object DataOpsQueries {
         val q = drifted.filter(col("vec_id") < 4 ||
             (col("vec_id") % 8 === 0 && col("vec_id") < 32))
           .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-        val brute = Similarity.bruteTopK(drifted, q,
-            "vec_id", "embedding", "query_id", "qe", k = 5)
-          .persist(StorageLevel.MEMORY_AND_DISK)
+        val brute = AnnRecall.brute(drifted, q)
         // the three fits over the persisted drifted union are
         // independent — submitted from separate threads (the
         // fitThread composite-floor lever)
@@ -3437,10 +3326,10 @@ object DataOpsQueries {
             q, "vec_id", "query_id", "qe", cellsNew, pq, k = 5, nprobe = 4)
         val seedPq = awaitFit(fSeedPq)
         val lloydPq = awaitFit(fLloydPq)
-        val rs = Similarity.recallAtK(serve(seedPq), brute, k = 5)
+        val rs = AnnRecall.recall(serve(seedPq), brute)
           .select(col("query_id"), col("n_hit").as("ns"),
             col("n_exact"), col("recall").as("recall_seed"))
-        val rl = Similarity.recallAtK(serve(lloydPq), brute, k = 5)
+        val rl = AnnRecall.recall(serve(lloydPq), brute)
           .select(col("query_id"), col("n_hit").as("nl"),
             col("recall").as("recall_lloyd"))
         rs.join(rl, Seq("query_id"))
@@ -3488,28 +3377,22 @@ object DataOpsQueries {
     QueryDef("qs30_tombstone_serving",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
-        val q = e.filter(col("vec_id") < 4)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-        val live = e.filter(col("vec_id") % 8 =!= 3)
-        val brute = Similarity.bruteTopK(live, q,
-            "vec_id", "embedding", "query_id", "qe", k = 5)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val pq = graft.sim.Pq.fit(e, "vec_id", "embedding", m = 16, k = 256)
-        val cells = Ivf.fit(e, "vec_id", "embedding", k = 8, iters = 0)
-        val index = Ivf.assign(e, "vec_id", "embedding", cells)
-          .select(col("vec_id"),
-            graft.sim.Pq.codes(col("embedding"), pq).as("codes"),
-            col("cell"))
-        val tomb = e.filter(col("vec_id") % 8 === 3).select(col("vec_id"))
-        val ann = Ivf.topKAdcOnIndexWithTombstones(index, tomb, q,
-            "vec_id", "query_id", "qe", cells, pq, k = 5, nprobe = 4)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        require(ann.filter(col("neighbor_id") % 8 === 3).isEmpty,
-          "serving must never return a tombstoned id")
-        Similarity.recallAtK(ann, brute, k = 5)
-          .select(col("query_id"), col("n_hit").cast("int").as("n_hit"),
-            col("n_exact").cast("int").as("n_exact"), col("recall"))
-          .orderBy(col("query_id"))
+        val q = AnnRecall.queries(e)
+        AnnRecall(e.filter(col("vec_id") % 8 =!= 3), q) {
+          val pq = graft.sim.Pq.fit(e, "vec_id", "embedding", m = 16, k = 256)
+          val cells = Ivf.fit(e, "vec_id", "embedding", k = 8, iters = 0)
+          val index = Ivf.assign(e, "vec_id", "embedding", cells)
+            .select(col("vec_id"),
+              graft.sim.Pq.codes(col("embedding"), pq).as("codes"),
+              col("cell"))
+          val tomb = e.filter(col("vec_id") % 8 === 3).select(col("vec_id"))
+          val ann = Ivf.topKAdcOnIndexWithTombstones(index, tomb, q,
+              "vec_id", "query_id", "qe", cells, pq, k = 5, nprobe = 4)
+            .persist(StorageLevel.MEMORY_AND_DISK)
+          require(ann.filter(col("neighbor_id") % 8 === 3).isEmpty,
+            "serving must never return a tombstoned id")
+          ann
+        }
       },
       Some(s"""WITH $qvCte,
         ${liveBruteCtes("embeddings", "e", 5, "e.vec_id % 8 <> 3")},
@@ -6990,8 +6873,7 @@ object DataOpsQueries {
           // the edge re-ranker: floats fetched for final rows only
           val floats = e.select(col("vec_id").as("neighbor_id"),
             col("embedding").as("__nvec"))
-          val qf = e.filter(col("vec_id") < 4)
-            .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
+          val qf = AnnRecall.queries(e)
           val w = org.apache.spark.sql.expressions.Window
             .partitionBy(col("query_id"))
             .orderBy(col("cosine").desc, col("neighbor_id"))
@@ -7061,8 +6943,7 @@ object DataOpsQueries {
           val short = runAvailableNow(s, out).filter(col("query_id") >= 0)
           val floats = e.select(col("vec_id").as("neighbor_id"),
             col("embedding").as("__nvec"))
-          val qf = e.filter(col("vec_id") < 4)
-            .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
+          val qf = AnnRecall.queries(e)
           val w = org.apache.spark.sql.expressions.Window
             .partitionBy(col("query_id"))
             .orderBy(col("cosine").desc, col("neighbor_id"))
@@ -7366,8 +7247,7 @@ object DataOpsQueries {
     QueryDef("qs1_cosine_topk",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
-        val q = e.filter(col("vec_id") < 4)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
+        val q = AnnRecall.queries(e)
         Similarity.bruteTopK(e, q, "vec_id", "embedding", "query_id", "qe", k = 5)
           .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
           .orderBy(col("query_id"), col("rank"))
