@@ -1,9 +1,10 @@
 #!/usr/bin/env bash
 # One-command correctness gate: runs the driver contract (graft.Verify)
 # and the DuckDB oracle compare (scripts/selfcheck.py) at sf0.01 AND
-# sf0.001, exiting nonzero on any FAIL. Pass --test to also run the
-# ScalaTest suite first. This is the same recipe the round driver runs;
-# run it before every round snapshot.
+# sf0.001, exiting nonzero on any FAIL. The oracle-pin specs run first
+# and fail fast. Pass --test to also run the ScalaTest suite first.
+# This is the same recipe the round driver runs; run it before every
+# round snapshot.
 #
 # Usage: scripts/gate.sh [--test]
 set -uo pipefail
@@ -18,6 +19,18 @@ if [[ "${1:-}" == "--test" ]]; then
     fail=1
   fi
   grep -E "Tests:|All tests" /tmp/gate_sbt_test.log | tail -2
+fi
+
+# Fast fail: an oracle string that drifted from its pin (or a
+# duplicated/unregistered row) fails here in seconds, before ~10
+# minutes of Verify runs.
+echo "== oracle pin + driver contract specs =="
+if ! sbt -batch "testOnly graft.OracleSqlPinSpec graft.SparkEntrySpec" \
+    > /tmp/gate_pin.log 2>&1; then
+  grep -E -A20 "\*\*\* FAILED" /tmp/gate_pin.log | head -60 || true
+  echo "GATE: oracle pin specs FAILED (log: /tmp/gate_pin.log)"
+  echo "GATE: FAIL"
+  exit 1
 fi
 
 for sf in 0.01 0.001; do

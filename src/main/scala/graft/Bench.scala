@@ -1,17 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = GraftSession.cpus
+    val spark = GraftSession(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warmup: pay one-time costs (codegen classloading, typed
     // encoder compilation, parquet footer caches, JIT) before the
@@ -146,15 +138,15 @@ object Bench {
     // numbers. Core count is part of that shape too: the driver's
     // 8-core SCALING run at sf0.1 must not clobber the 32-core record
     // (observed in r20: BENCH_FULL.json silently held the c8 numbers)
-    // — so the record carries `cpus` and lands in a per-core-count
-    // file, BENCH_FULL.json itself only at the driver's 32-core
-    // shape. Written relative to the working directory (sbt runs
+    // — so the record carries the parsed `cpus` and lands in a
+    // per-core-count file, BENCH_FULL.json itself only at the
+    // driver's 32-core shape. Written relative to the working directory (sbt runs
     // from the repo root), so a worktree or second clone records into
     // ITSELF, never into another checkout. Best-effort — a read-only
     // checkout must not fail the bench.
     if (only.isEmpty && sfDir.endsWith("sf0.1")) {
       val record = line.replaceFirst("\\{", s"""{"cpus":$cpus,""")
-      val file = if (cpus == "32") "BENCH_FULL.json"
+      val file = if (cpus == 32) "BENCH_FULL.json"
                  else s"BENCH_FULL_c$cpus.json"
       try java.nio.file.Files.write(
         java.nio.file.Paths.get(file),

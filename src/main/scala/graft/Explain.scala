@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection main: prints the formatted physical plan of named
   * queries (default: a pushdown/broadcast/window representative set) so
   * plan regressions — lost PushedFilters, a broadcast that became a
@@ -224,12 +222,7 @@ object Explain {
     // write and rewrite temp lakes)
     // (ql5_index_roundtrip is deliberately absent: its body WRITES a
     // temp lake before serving — Explain would leave one behind)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(GraftSession.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

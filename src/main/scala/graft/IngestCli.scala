@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.ingest.BarsIngest
 
 /** Flat-file ingest main — the `poly bars` equivalent (reference:
@@ -18,14 +16,7 @@ object IngestCli {
     val lakeRoot = args(1)
     val timeframe = if (args.length >= 3) args(2) else "day"
     val watchlist = args.drop(3).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-ingest")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(GraftSession.cpus)
     spark.sparkContext.setLogLevel("WARN")
     BarsIngest.ingest(spark, csvGlob, lakeRoot, timeframe, watchlist)
     val n = spark.read.parquet(lakeRoot).count()

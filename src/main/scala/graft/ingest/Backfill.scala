@@ -2,7 +2,7 @@ package graft.ingest
 
 import java.sql.Date
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Split-window backfill — the reference's incremental re-run scoping
@@ -26,11 +26,11 @@ object Backfill {
 
   /** Overwrite only the affected partitions of `lakeRoot` with the
     * matching slice of `recomputed` (which must carry ticker/year/month
-    * partition columns). Uses dynamic partition overwrite — untouched
-    * partitions stay as-is, re-runs are idempotent.
+    * partition columns). Uses dynamic partition overwrite, set on this
+    * write only — untouched partitions stay as-is, re-runs are
+    * idempotent, and the session conf is never touched.
     */
   def overwriteAffected(
-      spark: SparkSession,
       recomputed: DataFrame,
       splits: DataFrame,
       lakeRoot: String,
@@ -38,19 +38,14 @@ object Backfill {
     val affected = broadcast(affectedPartitions(splits, windowDays))
     val slice = recomputed.join(affected, Seq("ticker", "year", "month"), "left_semi")
     val n = slice.count()
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try slice
+    slice
       .repartition(col("ticker"), col("year"), col("month"))
       .sortWithinPartitions(col("datetime"))
       .write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
       .option("compression", "zstd")
       .partitionBy("ticker", "year", "month")
       .parquet(lakeRoot)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
     n
   }
 }

@@ -57,22 +57,14 @@ object Compact {
     val slice = spark.read.option("basePath", lakeRoot)
       .parquet(partitionPaths: _*)
     val n = slice.count()
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      slice
-        .repartition(col("ticker"), col("year"), col("month"))
-        .sortWithinPartitions(col("datetime"))
-        .write.mode(SaveMode.Overwrite)
-        .option("compression", "zstd")
-        .partitionBy("ticker", "year", "month")
-        .parquet(lakeRoot)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
+    slice
+      .repartition(col("ticker"), col("year"), col("month"))
+      .sortWithinPartitions(col("datetime"))
+      .write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .option("compression", "zstd")
+      .partitionBy("ticker", "year", "month")
+      .parquet(lakeRoot)
     n
   }
 

@@ -352,8 +352,8 @@ object ExtraQueries {
     // orders and customer are bucket-materialized on the join key
     // (8 buckets each, a fresh temp lake location per run), then
     // joined through the session catalog — and the body REQUIRES the
-    // physical plan to contain zero Exchange and a SortMergeJoin with
-    // broadcast disabled, so the zero-shuffle claim is enforced every
+    // physical plan to contain zero Exchange and a SortMergeJoin under
+    // a merge hint, so the zero-shuffle claim is enforced every
     // round, not just spec-asserted. At 100 TB this is the lever that
     // joins the fact table to its factor/dimension grids without ever
     // shuffling the big side again after the one-time bucketed write.
@@ -372,21 +372,18 @@ object ExtraQueries {
           buckets = 8, bucketCols = Seq("custkey"), sortCols = Seq("custkey"))
         graft.lake.Bucketed.write(cb, "graft_ql2_customer", s"$tmp/customer",
           buckets = 8, bucketCols = Seq("custkey"), sortCols = Seq("custkey"))
-        val joined = graft.lake.Bucketed.read(s, "graft_ql2_orders")
+        // the merge hint pins a sort-merge join (a broadcast join would
+        // be Exchange-free trivially and prove nothing), so the plan the
+        // co-location check reads is the plan that runs
+        val joined = graft.lake.Bucketed.read(s, "graft_ql2_orders").hint("merge")
           .join(graft.lake.Bucketed.read(s, "graft_ql2_customer"),
             Seq("custkey"))
           .select(col("custkey"), col("o_orderkey"), col("o_totalprice"),
             col("c_nationkey"))
-        // assert the co-location with broadcast off (a broadcast join
-        // would be Exchange-free trivially and prove nothing)
-        val prev = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try {
-          val plan = joined.queryExecution.executedPlan.toString
-          require(!plan.contains("Exchange"),
-            "bucketed join planned an Exchange:\n" + plan)
-          require(plan.contains("SortMergeJoin"), plan)
-        } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+        val plan = joined.queryExecution.executedPlan.toString
+        require(!plan.contains("Exchange"),
+          "bucketed join planned an Exchange:\n" + plan)
+        require(plan.contains("SortMergeJoin"), plan)
         joined.orderBy(col("o_orderkey"))
       },
       Some("""SELECT o_custkey AS custkey, o_orderkey, o_totalprice,
@@ -439,7 +436,7 @@ object ExtraQueries {
           .filter(col("event_type") === "purchase" && col("event_id") % 29 === 0)
           .select(col("ticker"), to_date(col("ts")).as("execution_date"))
           .distinct()
-        graft.ingest.Backfill.overwriteAffected(s, bars(2.0), splits, lake,
+        graft.ingest.Backfill.overwriteAffected(bars(2.0), splits, lake,
           windowDays = 14)
         s.read.parquet(lake)
           .select(col("ticker"), unix_micros(col("datetime")).as("ts_us"),

@@ -284,23 +284,13 @@ object Ivf {
     val kept = slice.join(broadcast(tomb), Seq(idCol), "left_anti")
     val keptCells = kept.select(col("cell")).distinct()
       .collect().map(_.get(0).toString).toSet
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      // one output file per rewritten cell — the Compact policy; the
-      // slice was read from many small files, the rewrite heals that
-      kept.repartition(col("cell"))
-        .write.mode(SaveMode.Overwrite)
-        .option("compression", "zstd")
-        .partitionBy("cell").parquet(indexRoot)
-    } finally {
-      prev match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None =>
-          spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
+    // one output file per rewritten cell — the Compact policy; the
+    // slice was read from many small files, the rewrite heals that
+    kept.repartition(col("cell"))
+      .write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .option("compression", "zstd")
+      .partitionBy("cell").parquet(indexRoot)
     // fully-tombstoned cells wrote no partition — drop their dirs
     val root = new Path(indexRoot)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())

@@ -151,7 +151,11 @@ object Classifier {
     // one slim deserialized materialization; K pure-compute passes
     // (the documented 100 TB posture: persist the prepared projection
     // once, pay K slim scans, never re-tokenize)
+    // a null-text doc (null n/bs) has no tokens to learn from: drop it
+    // before the typed decode, which would throw on it, so it trains
+    // exactly like a corpus without that doc
     val feats = prepared
+      .filter(col("n").isNotNull && col("bs").isNotNull)
       .select(col("y").as("_1"), col("n").as("_2"), col("bs").as("_3"))
       .as[(Int, Int, Array[Int])].rdd
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

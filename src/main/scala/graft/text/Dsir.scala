@@ -89,7 +89,10 @@ object Dsir {
     // count toward the raw distribution only — exactly the
     // when(targetCol) semantics of the aggregate this replaces.
     import prep.sparkSession.implicits._
+    // a null-text doc has a null bs: it carries no grams, so it is
+    // dropped before the typed decode (which would throw on it)
     val (cr, ct) = prep
+      .filter(col("bs").isNotNull)
       .select(coalesce(col(targetCol), lit(false)).as("_1"),
         col("bs").as("_2"))
       .as[(Boolean, Array[Int])].rdd

@@ -27,8 +27,13 @@ class BackfillSpec extends SparkTestBase {
 
     // split on AAA 2024-01-10 -> only (AAA, 2024, 1) within +-14 days
     val splits = Seq(("AAA", Date.valueOf("2024-01-10"))).toDF("ticker", "execution_date")
-    val n = Backfill.overwriteAffected(spark, bars(2.0), splits, lake)
+    val mode = "spark.sql.sources.partitionOverwriteMode"
+    val modeBefore = spark.conf.getOption(mode)
+    val n = Backfill.overwriteAffected(bars(2.0), splits, lake)
     assert(n == 1)
+    // dynamic overwrite is a per-write option: the shared session conf
+    // (read by concurrent fits) is the same before and after the call
+    assert(spark.conf.getOption(mode) == modeBefore)
 
     val out = spark.read.parquet(lake)
       .select($"ticker", month($"datetime").as("m"), $"close")

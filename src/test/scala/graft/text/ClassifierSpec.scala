@@ -80,6 +80,20 @@ class ClassifierSpec extends SparkTestBase {
     prep.unpersist()
   }
 
+  test("a null-text doc trains exactly like the corpus without it") {
+    val docs = Seq((1L, "the the is"), (2L, "big data rows"),
+        (3L, "a of to is in and the"))
+    val withNull = (docs.map { case (i, t) => (i, Option(t)) } :+
+        ((4L, Option.empty[String]))).toDF("doc_id", "text")
+    val w = Classifier.trainQuality(
+      Classifier.prepareQuality(docs.toDF("doc_id", "text"), "text", "doc_id"),
+      eta = 128.0, steps = 3)
+    val wNull = Classifier.trainQuality(
+      Classifier.prepareQuality(withNull, "text", "doc_id"),
+      eta = 128.0, steps = 3)
+    assert(wNull.toSeq == w.toSeq)
+  }
+
   test("non-power-of-two eta is rejected (exactness contract)") {
     val prep = Classifier.prepareQuality(
       Seq((1L, "the a")).toDF("doc_id", "text"), "text", "doc_id")

@@ -83,6 +83,16 @@ class DsirSpec extends SparkTestBase {
     assert(kept.forall(_ == false))
   }
 
+  test("a null-text doc fits exactly like the corpus without it") {
+    val withNull = Seq((1L, Option("a b a b"), true), (2L, Option("x y x y"), false),
+        (3L, Option.empty[String], false))
+      .toDF("doc_id", "text", "is_target")
+      .select($"doc_id", $"is_target", Dsir.bigramBuckets($"text").as("bs"))
+    val without = prep(Seq((1L, "a b a b", true), (2L, "x y x y", false)))
+    assert(Dsir.fitRatioLut(withNull, "is_target", dim = 4096).toSeq ==
+      Dsir.fitRatioLut(without, "is_target", dim = 4096).toSeq)
+  }
+
   test("null target flags count toward the raw distribution only") {
     // the one-pass fit must reproduce the previous aggregate's
     // when(targetCol) semantics: a NULL flag contributes its grams to

@@ -1,20 +1,13 @@
 package graft.text
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkTestBase
 
 /** Pins [[NgramLm]]'s Stupid Backoff semantics on a hand-computable
   * corpus: backoff ladder level selection, the minCount prune, the
   * add-one OOV floor, the fixed-point mean, and the tertile gate's
   * order-statistic thresholds.
   */
-class NgramLmSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class NgramLmSpec extends SparkTestBase {
 
   import spark.implicits._
 
