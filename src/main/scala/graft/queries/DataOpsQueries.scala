@@ -634,7 +634,7 @@ object DataOpsQueries {
         ${encodeCte("oenc", "ud", "u", "ocb cb", 4)},
         ${cellCte("oca", "ud", "u", "oseeds")},
         ${probeCte("oqp", "oseeds", 4)},
-        ${adcCtes("o", "qp", "JOIN oca ca ON ca.vec_id = enc.vec_id JOIN oqp qp ON qp.cell = ca.cell AND enc.vec_id <> qp.query_id")},
+        ${adcCtes("o", "qp", probedJoin("o"))},
         ${adcCosineCte("o")},
         ${topKCte("op5", "op1", 5)},
         ${hitCte("ohit", "op5")}"""
@@ -648,7 +648,7 @@ object DataOpsQueries {
         ${encodeCte("nenc", "ud", "u", "ncb cb", 4)},
         ${cellCte("nca", "ud", "u", "nseeds")},
         ${probeCte("nqp", "nseeds", 4)},
-        ${adcCtes("n", "qp", "JOIN nca ca ON ca.vec_id = enc.vec_id JOIN nqp qp ON qp.cell = ca.cell AND enc.vec_id <> qp.query_id")},
+        ${adcCtes("n", "qp", probedJoin("n"))},
         ${adcCosineCte("n")},
         ${topKCte("np5", "np1", 5)},
         ${hitCte("nhit", "np5")}"""
@@ -668,7 +668,7 @@ object DataOpsQueries {
   private lazy val ivfRefitLloydArmCtes: String =
     s"""${pqLloydCtes("l", "ud", "npseeds", 16, 4, "lcb")},
         ${encodeCte("lenc", "ud", "u", "lcb cb", 4)},
-        ${adcCtes("l", "qp", "JOIN nca ca ON ca.vec_id = enc.vec_id JOIN nqp qp ON qp.cell = ca.cell AND enc.vec_id <> qp.query_id")},
+        ${adcCtes("l", "qp", probedJoin("n"))},
         ${adcCosineCte("l")},
         ${topKCte("lp5", "lp1", 5)},
         ${hitCte("lhit", "lp5")}"""
@@ -2607,7 +2607,7 @@ object DataOpsQueries {
         ${cellCte("ca", "embeddings", "e", "cent")},
         ${probeCte("qp", "cent", 4)},
         $qnCte,
-        ${adcCtes("", "qp", "JOIN ca ON ca.vec_id = enc.vec_id JOIN qp ON qp.cell = ca.cell AND enc.vec_id <> qp.query_id")},
+        ${adcCtes("", "qp", probedJoin(""))},
         ${adcCosineCte("")},
         ${topKCte("p5", "p1", 5)},
         ${recallTail("p5")}""")),
@@ -2816,7 +2816,7 @@ object DataOpsQueries {
         ${cellCte("ca", "embeddings", "e", "cent")},
         ${probeCte("qp", "cent", 4)},
         $qnCte,
-        ${adcCtes("", "qp", "JOIN ca ON ca.vec_id = enc.vec_id JOIN qp ON qp.cell = ca.cell AND enc.vec_id <> qp.query_id")},
+        ${adcCtes("", "qp", probedJoin(""))},
         ${adcCosineCte("")},
         ${topKCte("p5", "p1", 5)},
         ${recallTail("p5")}""")),
@@ -6750,7 +6750,7 @@ object DataOpsQueries {
         ${cellCte("ca", "embeddings", "e", "cent")},
         ${probeCte("qp", "cent", 4)},
         $qnCte,
-        ${adcCtes("", "qp", "JOIN ca ON ca.vec_id = enc.vec_id JOIN qp ON qp.cell = ca.cell AND enc.vec_id <> qp.query_id")},
+        ${adcCtes("", "qp", probedJoin(""))},
         ${adcCosineCte("")}
         ${rankedTopKSql("p1", 5)}""")),
 

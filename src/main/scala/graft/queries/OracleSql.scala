@@ -199,8 +199,7 @@ private[queries] object OracleSql {
     * subspace order ([[graft.sim.Pq]]'s lookup-table accumulation).
     * Every CTE name (`enc`, `cb`, `pj`, `p0`) carries the prefix `pre`.
     */
-  def adcCtes(pre: String, q: String, joins: String): String = {
-    def ref(t: String) = if (pre.isEmpty) t else s"$pre$t $t"
+  def adcCtes(pre: String, q: String, joins: String): String =
     s"""${pre}pj AS (SELECT enc.vec_id, $q.query_id, enc.j,
             list_reduce(list_transform(range(1, 5),
               i -> CAST($q.qe[CAST(enc.j * 4 + i AS INT)] AS DOUBLE) * CAST(cb.ce[i] AS DOUBLE)),
@@ -208,13 +207,23 @@ private[queries] object OracleSql {
             list_reduce(list_transform(range(1, 5),
               i -> CAST(cb.ce[i] AS DOUBLE) * CAST(cb.ce[i] AS DOUBLE)),
               (x, y) -> x + y) AS nrmj
-          FROM ${ref("enc")} JOIN ${ref("cb")} ON cb.j = enc.j AND cb.code = enc.code
+          FROM ${ref(pre, "enc")} JOIN ${ref(pre, "cb")} ON cb.j = enc.j AND cb.code = enc.code
           $joins),
         ${pre}p0 AS (SELECT vec_id AS neighbor_id, query_id,
             list_reduce(list(dotj ORDER BY j), (x, y) -> x + y) AS num,
             list_reduce(list(nrmj ORDER BY j), (x, y) -> x + y) AS rn
           FROM ${pre}pj GROUP BY vec_id, query_id)"""
-  }
+
+  /** [[adcCtes]]' join for an IVF-PQ index: the vectors whose cell `ca`
+    * is one of the query's probed cells `qp` (both prefixed `cells`).
+    */
+  def probedJoin(cells: String): String =
+    s"JOIN ${ref(cells, "ca")} ON ca.vec_id = enc.vec_id " +
+      s"JOIN ${ref(cells, "qp")} ON qp.cell = ca.cell AND enc.vec_id <> qp.query_id"
+
+  /** CTE `t` prefixed `pre` as a FROM item aliased `t`. */
+  private def ref(pre: String, t: String): String =
+    if (pre.isEmpty) t else s"$pre$t $t"
 
   /** `p1` (prefixed `pre`): the ADC cosine of [[adcCtes]]' sums. */
   def adcCosineCte(pre: String): String =
