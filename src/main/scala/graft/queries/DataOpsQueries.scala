@@ -3251,9 +3251,7 @@ object DataOpsQueries {
           .select(col("query_id"),
             when(col("query_id") % 8 === 0, lit("drift"))
               .otherwise(lit("old")).as("region"),
-            col("nf").cast("int").as("n_frozen"),
-            col("nr").cast("int").as("n_refit"),
-            col("n_exact").cast("int").as("n_exact"),
+            col("nf").as("n_frozen"), col("nr").as("n_refit"), col("n_exact"),
             col("recall_frozen"), col("recall_refit"))
           .orderBy(col("query_id"))
       },
@@ -3336,9 +3334,7 @@ object DataOpsQueries {
           .select(col("query_id"),
             when(col("query_id") % 8 === 0, lit("drift"))
               .otherwise(lit("old")).as("region"),
-            col("ns").cast("int").as("n_seed"),
-            col("nl").cast("int").as("n_lloyd"),
-            col("n_exact").cast("int").as("n_exact"),
+            col("ns").as("n_seed"), col("nl").as("n_lloyd"), col("n_exact"),
             col("recall_seed"), col("recall_lloyd"))
           .orderBy(col("query_id"))
       },
